@@ -3555,22 +3555,6 @@ object Analytics {
     result.orderBy(col("p1"), col("p2"))
   }
 
-  /** Path-compressing union-find over part ids (driver-side contraction
-    * state for [[graphMstBoruvka]] — see its scale note). */
-  private final class PartUnionFind {
-    private val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      parent.getOrElseUpdate(x, x)
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: Long, b: Long): Unit =
-      parent(math.max(a, b)) = math.min(a, b)
-  }
-
   /** Query key `graph_mst_boruvka`: maximum-similarity spanning forest
     * of the undirected co-order part graph by Borůvka rounds — the
     * single-linkage BACKBONE of the similarity graph (weight = co-order
@@ -3625,7 +3609,7 @@ object Analytics {
       .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("cnt"))
       .as[(Long, Long, Long)]
       .localCheckpoint()
-    val uf = new PartUnionFind
+    val uf = new UnionFind
     // the part catalog (dim-sized): one job, fixes the union-find domain
     val ids = e0.flatMap(t => Iterator(t._1, t._2)).distinct().collect()
     ids.foreach(uf.find)
@@ -3638,8 +3622,7 @@ object Analytics {
     // total order, so the chosen forest is width-free (the Kruskal pin)
     graft.LoopConf.static(s, graft.LoopConf.width(e0.count())) {
     while (!done && round <= 34) {
-      val roots = ids.map(i => i -> uf.find(i)).toMap
-      val bc = graft.Broadcasts.track(s.sparkContext.broadcast(roots))
+      val bc = graft.Broadcasts.track(s.sparkContext.broadcast(uf.rootMap))
       // one job: per-component best cut edge, map-side partial reduce
       val best = e0.flatMap { case (a, b, c) =>
         val m = bc.value
@@ -3662,11 +3645,9 @@ object Analytics {
         // insertion order for the asserted unions
         best.distinct.sortBy { case (c, a, b) => (-c, a, b) }
           .foreach { case (c, a, b) =>
-            val (ra, rb) = (uf.find(a), uf.find(b))
-            if (ra == rb) throw new IllegalStateException(
+            if (!uf.union(a, b)) throw new IllegalStateException(
               s"graphMstBoruvka: chosen edge ($a,$b) closes a cycle — " +
                 "impossible under a strict total order")
-            uf.union(ra, rb)
             out += ((a, b, c, round))
           }
         round += 1

@@ -1479,16 +1479,19 @@ object LlmPipeline {
     * memo value (`sim_pairs`), built exactly like Analytics.coPairArr
     * (r16 verdict task 4): `sim_threshold` — whose declared semantics
     * ARE these pairs — is the PRODUCER and always recomputes +
-    * refreshes; graph_pagerank / cluster_dbscan / dedup_cluster_cc
-    * consume, so the O(n²) broadcast-matrix scan runs once per corpus
-    * fingerprint instead of once per key (measured ~7-8 s runMs per
-    * consumer at sf0.1/32). The value is DATA-sized (pair list), so the
-    * collect rides the same 1M-row broadcast-tier gate — per-partition
-    * take(gate+1) keeps the check inside the one collect job; past the
-    * gate every key rides the un-memoized distributed build (at 100 TB
-    * consumers ride the LSH/IVF rungs instead — the declared scale
-    * story). Rows sort by (a_id, b_id) before storing so consumer input
-    * order is a pure function of the data. */
+    * refreshes; graph_pagerank / cluster_dbscan consume it as a frame
+    * ([[simPairs]]) and dedup_cluster_cc reads the array itself (its
+    * driver union-find tier), so the O(n²) broadcast-matrix scan runs
+    * once per corpus fingerprint instead of once per key (measured
+    * ~7-8 s runMs per consumer at sf0.1/32). `None` = past the gate:
+    * every consumer then takes its distributed form. The value is
+    * DATA-sized (pair list), so the collect rides the same 1M-row
+    * broadcast-tier gate — per-partition take(gate+1) keeps the check
+    * inside the one collect job; past the gate every key rides the
+    * un-memoized distributed build (at 100 TB consumers ride the LSH/IVF
+    * rungs instead — the declared scale story). Rows sort by
+    * (a_id, b_id) before storing so consumer input order is a pure
+    * function of the data. */
   private[graft] def simPairArr(
       s: SparkSession, d: String, producer: Boolean = false)
       : Option[Array[(Long, Long, Double)]] = {
@@ -1505,13 +1508,15 @@ object LlmPipeline {
     else graft.Memo.getOrCompute("sim_pairs", fp)(fresh)
   }
 
-  /** Memo-backed pair set for the sim-graph consumers. BOTH branches end
-    * in the same orderBy the r16 consumers received: the range exchange
-    * is what lets a symmetrizing union read ONE ReusedExchange, keeps
-    * the downstream loop shapes identical to the distributed form (a
-    * bare LocalRelation measured 1.2-1.8× SLOWER on the consumers —
-    * its single-slice scan and small-size statistics reshaped every
-    * loop plan), and costs one tiny sort of the memo rows. */
+  /** Memo-backed pair set as a frame, for the producer and the frame
+    * consumers (graph_pagerank, cluster_dbscan; dedup_cluster_cc reads
+    * [[simPairArr]] directly). BOTH branches end in the same orderBy
+    * the r16 consumers received: the range exchange is what lets a
+    * symmetrizing union read ONE ReusedExchange, keeps the downstream
+    * loop shapes identical to the distributed form (a bare
+    * LocalRelation measured 1.2-1.8× SLOWER on the consumers — its
+    * single-slice scan and small-size statistics reshaped every loop
+    * plan), and costs one tiny sort of the memo rows. */
   private[graft] def simPairs(
       s: SparkSession, d: String, producer: Boolean = false): DataFrame = {
     import s.implicits._
@@ -2820,39 +2825,81 @@ object LlmPipeline {
   /** Near-duplicate CLUSTERING: connected components over the cosine-
     * threshold pair graph — the transitive-closure step real dedup needs
     * (A≈B and B≈C must land in ONE cluster even when A≉C; the per-pair
-    * verdict ops cannot express that). Pregel-style iterative min-label
-    * propagation: labels start as vec_id, each round every node takes the
-    * min of its own and its neighbors' labels, fixpoint = components
-    * labeled by their min member. Rounds = graph diameter (near-dup
-    * graphs are dense clumps — 2-4 rounds in practice; the driver loop
-    * carries one Long per round, all per-round work is joins/groupBys).
-    * `localCheckpoint` truncates the per-iteration lineage — without it
-    * the plan doubles every round. At 100 TB the same loop runs with the
-    * alternating large-star/small-star optimization (O(log n) rounds,
-    * Kiveris et al.'s CC-MR shape) and candidate edges come from the LSH
-    * bucket stage instead of the broadcast kernel. Oracle-gated: DuckDB
-    * computes the same components with a recursive CTE. */
+    * verdict ops cannot express that). Every vector gets one row,
+    * cluster_id = the min vec_id of its component (itself when it has no
+    * pair). Two tiers, one answer:
+    *
+    *  - DRIVER (the pair set fits the `sim_pairs` memo's 1M-pair gate,
+    *    [[simPairArr]]): the pair array is already on the driver — built
+    *    or served — so a min-root union-find ([[ccDriver]]) labels the
+    *    components in O(pairs) with O(nodes) driver memory, and one map
+    *    over the distinct embedding ids applies the broadcast root map.
+    *    No Spark job runs while the frame is built (the loop below pays
+    *    ~19 jobs of per-round planning and scheduling for a 2000-node
+    *    graph) — the Borůvka dimension-sized union-find adjudication.
+    *  - LOOP (past the gate — the scale path, [[ccLoop]]): Pregel-style
+    *    min-label propagation ([[minLabelCc]]) over the distributed pair
+    *    build; rounds = graph diameter (near-dup graphs are dense clumps
+    *    — 2-4 rounds in practice; the driver carries one Long per round,
+    *    all per-round work is joins/groupBys). At 100 TB the same loop
+    *    runs with the alternating large-star/small-star optimization
+    *    (O(log n) rounds, Kiveris et al.'s CC-MR shape) and candidate
+    *    edges come from the LSH bucket stage instead of the broadcast
+    *    kernel.
+    *
+    * Oracle-gated: DuckDB computes the same components with a recursive
+    * CTE; DedupClusterCcSpec pins the driver tier row-for-row against
+    * the loop. */
   def dedupClusterCc(s: SparkSession, d: String): DataFrame = {
-    val pairs = simPairs(s, d).select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .union(pairs.select(col("b_id"), col("a_id")))
+    val nodes = Tables.embeddings(s, d).select(col("vec_id"))
+    simPairArr(s, d) match {
+      case Some(rows) => ccDriver(nodes, rows)
+      case None => ccLoop(nodes, simPairsBuild(s, d))
+    }
+  }
+
+  /** [[dedupClusterCc]]'s driver tier: union-find over the driver-held
+    * pairs, then the root map of the paired (non-singleton) ids is
+    * broadcast and applied to the distinct `vec_id`s of `nodes` — an
+    * unmapped id is its own cluster. */
+  private[graft] def ccDriver(
+      nodes: DataFrame, pairs: Array[(Long, Long, Double)]): DataFrame = {
+    val s = nodes.sparkSession
+    import s.implicits._
+    val uf = new UnionFind
+    pairs.foreach(p => uf.union(p._1, p._2))
+    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(uf.rootMap))
+    nodes.select(col("vec_id")).distinct().as[Long]
+      .map(v => (v, bc.value.getOrElse(v, v)))
+      .toDF("vec_id", "cluster_id")
+      .orderBy(col("vec_id"))
+  }
+
+  /** [[dedupClusterCc]]'s loop tier: [[minLabelCc]] over the symmetrized
+    * (a_id, b_id) pairs, every `vec_id` of `nodes` starting as its own
+    * label. */
+  private[graft] def ccLoop(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    val p = pairs.select(col("a_id"), col("b_id"))
+    val edges = p
+      .union(p.select(col("b_id"), col("a_id")))
       .toDF("src", "dst")
       .localCheckpoint()
-    val labels0 = Tables.embeddings(s, d)
-      .select(col("vec_id").as("v"), col("vec_id").as("lbl"))
+    val labels0 = nodes.select(col("vec_id").as("v"), col("vec_id").as("lbl"))
     minLabelCc(labels0, edges)
       .select(col("v").as("vec_id"), col("lbl").as("cluster_id"))
       .orderBy(col("vec_id"))
   }
 
-  /** The min-label CC loop shared by [[dedupClusterCc]] and
-    * [[dedupMinhashCc]]: `edgesSym` must be the SYMMETRIC checkpointed
-    * edge list (freed here once the loop converges), `labels0` the
-    * (v, lbl) start frame with lbl = v. Labels only ever DECREASE
-    * (min-propagation), so the global label sum is a fixpoint detector:
-    * unchanged sum ⇔ no node changed — one cheap aggregate per round
-    * instead of an old-vs-new join, and that aggregate's job is also
-    * what materializes the round's LAZY checkpoint (1 job/round). */
+  /** The min-label CC loop shared by [[dedupClusterCc]]'s past-gate
+    * tier ([[ccLoop]]), [[dedupMinhashCc]], cluster_dbscan and
+    * cluster_hierarchical_cut: `edgesSym` must be the SYMMETRIC
+    * checkpointed edge list (freed here once the loop converges),
+    * `labels0` the (v, lbl) start frame with lbl = v. Labels only ever
+    * DECREASE (min-propagation), so the global label sum is a fixpoint
+    * detector: unchanged sum ⇔ no node changed — one cheap aggregate
+    * per round instead of an old-vs-new join, and that aggregate's job
+    * is also what materializes the round's LAZY checkpoint
+    * (1 job/round). */
   private[graft] def minLabelCc(
       labels0: DataFrame, edgesSym: DataFrame): DataFrame = {
     val s = labels0.sparkSession
