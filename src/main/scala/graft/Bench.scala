@@ -49,20 +49,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set before the first session in this JVM:
-      // the default 100-entry codegen class cache thrashes across 360
-      // distinct query plans (~3-5 generated classes each), so under
-      // INTERLEAVED sampling every sample pays Janino recompilation —
-      // sub-second keys read ~50-100 ms high. 8192 entries hold the
-      // whole surface's generated classes across all passes.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = Session.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional filter for local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -9,11 +9,14 @@ package graft
   *
   * Contract (the TRAIN-always-trains rule, ADVICE round-10): the op that
   * OWNS a kernel's benchmarked cost always computes fresh and refreshes
-  * the memo (`refresh`); only DERIVED consumers (the condensation over
-  * the scc labeling, the composed pipeline reports) read it
-  * (`getOrCompute`). Stored values must be session-free plain JVM data
-  * and at most dimension-sized — the same fits-in-memory adjudication as
-  * the broadcast-join tier.
+  * the memo; only DERIVED consumers (the condensation over the scc
+  * labeling, the composed pipeline reports) read it. A kernel function
+  * shared by both sides states which one it is with
+  * `owned(kernel, fp, producer)`; code that is only ever one side calls
+  * `refresh` or `getOrCompute` directly. Stored values must be
+  * session-free plain JVM data and at most dimension-sized — the same
+  * fits-in-memory adjudication as the broadcast-join tier (data-sized
+  * values come through [[Gated.collect]]).
   *
   * Fingerprints hash the table's file listing (relative path, size,
   * mtime), so a same-path overwrite (mode overwrite in tests, the
@@ -126,6 +129,19 @@ object Memo {
       java.util.concurrent.CompletableFuture.completedFuture(v: AnyRef)))
     v
   }
+
+  /** The memo side of the op that calls it: the producer (the op that
+    * owns the kernel's cost) always computes and refreshes, every other
+    * caller reads through [[getOrCompute]]. */
+  def owned[T <: AnyRef](kernel: String, fp: Option[String], producer: Boolean)(
+      compute: => T): T =
+    if (producer) refresh(kernel, fp)(compute)
+    else getOrCompute(kernel, fp)(compute)
+
+  /** Test hook: the stored value, without marking it served. */
+  private[graft] def stored(kernel: String, fp: Option[String]): Option[AnyRef] =
+    fp.flatMap(f => Option(cache.get(kernel + ":" + f)))
+      .filter(_.isDone).map(_.join())
 
   /** Test hook: drop everything (state isolation between specs). */
   private[graft] def clear(): Unit = cache.clear()

@@ -173,14 +173,8 @@ object ScaleStress {
     val n = args.headOption.map(_.toInt).getOrElse(10)
     val out = args.lift(1).getOrElse("/tmp/graft-scale")
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Reuse an already-built stress set: the replication phase (six
     // multi-million-row union writes) leaves the JVM with GC pressure that

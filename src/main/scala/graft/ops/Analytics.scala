@@ -413,12 +413,11 @@ object Analytics {
     * UN-thresholded counts measure 1.2M rows there, past the gate, which
     * is why `graph_mst_boruvka` / `graph_random_walk_sample` /
     * `assoc_*`'s raw supports are NOT consumers: their edge sets
-    * genuinely differ). The collect rides the same 1M-row
-    * broadcast-tier gate as sccEdgeRows — per-partition take(gate+1)
-    * keeps the check inside the one collect job; past the gate both
-    * producer and consumers ride the un-memoized DataFrame build. Rows
-    * sort by (p1, p2) before storing so consumer input order is a pure
-    * function of the data, not of collect scheduling. */
+    * genuinely differ). The collect is [[graft.Gated.collect]]; past
+    * the gate both producer and consumers ride the un-memoized
+    * DataFrame build. Rows sort by (p1, p2) before storing so consumer
+    * input order is a pure function of the data, not of collect
+    * scheduling. */
   /** The un-memoized DataFrame build of the thresholded pair counts —
     * hoisted to object level so [[coPairCounts]]'s gated collect
     * attributes to the whitelisted def (the nested-def lint rule). */
@@ -446,16 +445,11 @@ object Analytics {
       s: SparkSession, d: String, producer: Boolean = false)
       : Option[Array[(Long, Long, Long)]] = {
     import s.implicits._
-    val fp = graft.Memo.fingerprint(d, "lineitem.parquet")
-    val gate = 1000000
-    lazy val fresh: Option[Array[(Long, Long, Long)]] = {
-      val arr = coPairCountsBuild(s, d).as[(Long, Long, Long)]
-        .mapPartitions(_.take(gate + 1)).collect()
-      if (arr.length > gate) None
-      else Some(arr.sortBy(t => (t._1, t._2)))
+    graft.Memo.owned("co_edges_w",
+      graft.Memo.fingerprint(d, "lineitem.parquet"), producer) {
+      graft.Gated.collect(coPairCountsBuild(s, d).as[(Long, Long, Long)])
+        .map(_.sortBy(t => (t._1, t._2)))
     }
-    if (producer) graft.Memo.refresh("co_edges_w", fp)(fresh)
-    else graft.Memo.getOrCompute("co_edges_w", fp)(fresh)
   }
 
   /** Static-compile width for a co-order-family loop: derived from the
@@ -2295,21 +2289,18 @@ object Analytics {
 
   /** Gated driver-side flattening of the BFS level frames to (seed, v,
     * dist) rows — the `bfs_flat_16` memo value (K·|V| rows, data-sized,
-    * so the collect rides the 1M-row broadcast-tier gate exactly like
-    * coPairArr; None past the gate keeps every key on the distributed
-    * build). Rows sort by (d, seed, v) so consumer input order is a
-    * pure function of the data. */
+    * so it comes through [[graft.Gated.collect]]; None past the gate
+    * keeps every key on the distributed build). Rows sort by
+    * (d, seed, v) so consumer input order is a pure function of the
+    * data. */
   private def bfsFlatArr(
       levels: Seq[DataFrame]): Option[Array[(Long, Long, Long)]] = {
     val s = levels.head.sparkSession
     import s.implicits._
-    val gate = 1000000
-    val arr = bfsFlatOf(levels.zipWithIndex)
+    graft.Gated.collect(bfsFlatOf(levels.zipWithIndex)
       .select(col("seed"), col("v"), col("d"))
-      .as[(Long, Long, Long)]
-      .mapPartitions(_.take(gate + 1)).collect()
-    if (arr.length > gate) None
-    else Some(arr.sortBy(t => (t._3, t._1, t._2)))
+      .as[(Long, Long, Long)])
+      .map(_.sortBy(t => (t._3, t._1, t._2)))
   }
 
   /** Memo-served flattened (seed, v, d) BFS rows for the distance-only
@@ -3035,7 +3026,7 @@ object Analytics {
     // Round16OptSpec pins this path against the distributed sccFrom).
     // Above the gate the memo is skipped and the full distributed
     // fixpoint runs unchanged — the 100 TB path.
-    lazy val fresh: Array[(Long, Long)] =
+    graft.Memo.owned("scc_labels", fp, producer) {
       sccEdgeArr(s, d, producer) match {
         case Some(arr) =>
           val nodes = arr.iterator
@@ -3047,8 +3038,7 @@ object Analytics {
             .as[(Long, Long)]
             .collect()
       }
-    if (producer) graft.Memo.refresh("scc_labels", fp)(fresh)
-    else graft.Memo.getOrCompute("scc_labels", fp)(fresh)
+    }
   }
 
   /** The directed (src, dst) edge set shared by the same producer/
@@ -3069,28 +3059,21 @@ object Analytics {
 
   /** The gated driver-side form of the shared directed edge set — the
     * memo value itself (r16 split so [[sccLabelRows]] can finish
-    * driver-side on the rows the memo already collected). */
+    * driver-side on the rows the memo already collected). The array is
+    * data-sized (the wedge set grows toward catalog² with co-occurrence,
+    * ADVICE round-15), so it comes through [[graft.Gated.collect]], the
+    * same 1M-edge gate as sccFrom's Tarjan tail; past the gate the memo
+    * holds `None` and both producer and consumer ride the un-memoized
+    * DataFrame path. Unsorted: Tarjan's labels do not depend on edge
+    * order. */
   private[graft] def sccEdgeArr(
       s: SparkSession, d: String, producer: Boolean)
       : Option[Array[(Long, Long)]] = {
     import s.implicits._
-    val fp = graft.Memo.fingerprint(d, "lineitem.parquet")
-    // The memoized value is a driver-side array, so the collect rides the
-    // same 1M-edge broadcast-tier gate as sccFrom's Tarjan tail (ADVICE
-    // round-15: the wedge set grows toward catalog² with co-occurrence).
-    // Per-partition take(gate+1) keeps the gate check inside the ONE
-    // collect job — if the total lands ≤ gate no partition hit its cap,
-    // so the set is exact; past the gate the memo is skipped and both
-    // producer and consumer ride the un-memoized DataFrame path (driver
-    // transfer bounded at numPartitions × gate in the degenerate case).
-    val gate = 1000000
-    lazy val fresh: Option[Array[(Long, Long)]] = {
-      val arr = directedPartEdges(s, d).as[(Long, Long)]
-        .mapPartitions(_.take(gate + 1)).collect()
-      if (arr.length > gate) None else Some(arr)
+    graft.Memo.owned("scc_edges",
+      graft.Memo.fingerprint(d, "lineitem.parquet"), producer) {
+      graft.Gated.collect(directedPartEdges(s, d).as[(Long, Long)])
     }
-    if (producer) graft.Memo.refresh("scc_edges", fp)(fresh)
-    else graft.Memo.getOrCompute("scc_edges", fp)(fresh)
   }
 
   /** Iterative driver-side Tarjan over a REMAINDER core that already

@@ -1485,9 +1485,8 @@ object LlmPipeline {
     * once per corpus fingerprint instead of once per key (measured
     * ~7-8 s runMs per consumer at sf0.1/32). `None` = past the gate:
     * every consumer then takes its distributed form. The value is
-    * DATA-sized (pair list), so the collect rides the same 1M-row
-    * broadcast-tier gate — per-partition take(gate+1) keeps the check
-    * inside the one collect job; past the gate every key rides the
+    * DATA-sized (pair list), so it comes through
+    * [[graft.Gated.collect]]; past the gate every key rides the
     * un-memoized distributed build (at 100 TB consumers ride the LSH/IVF
     * rungs instead — the declared scale story). Rows sort by
     * (a_id, b_id) before storing so consumer input order is a pure
@@ -1496,16 +1495,11 @@ object LlmPipeline {
       s: SparkSession, d: String, producer: Boolean = false)
       : Option[Array[(Long, Long, Double)]] = {
     import s.implicits._
-    val fp = graft.Memo.fingerprint(d, "embeddings.parquet")
-    val gate = 1000000
-    lazy val fresh: Option[Array[(Long, Long, Double)]] = {
-      val arr = simPairsBuild(s, d).as[(Long, Long, Double)]
-        .mapPartitions(_.take(gate + 1)).collect()
-      if (arr.length > gate) None
-      else Some(arr.sortBy(t => (t._1, t._2)))
+    graft.Memo.owned("sim_pairs",
+      graft.Memo.fingerprint(d, "embeddings.parquet"), producer) {
+      graft.Gated.collect(simPairsBuild(s, d).as[(Long, Long, Double)])
+        .map(_.sortBy(t => (t._1, t._2)))
     }
-    if (producer) graft.Memo.refresh("sim_pairs", fp)(fresh)
-    else graft.Memo.getOrCompute("sim_pairs", fp)(fresh)
   }
 
   /** Memo-backed pair set as a frame, for the producer and the frame
@@ -5017,9 +5011,9 @@ object LlmPipeline {
   private[graft] def trainUnigram(
       s: SparkSession, d: String, producer: Boolean = false)
       : (Array[(String, Long)], Array[Double]) = {
-    val fp = graft.Memo.fingerprint(d, "documents.parquet")
-    if (producer) graft.Memo.refresh("unigram_pieces", fp)(trainUnigramFresh(s, d))
-    else graft.Memo.getOrCompute("unigram_pieces", fp)(trainUnigramFresh(s, d))
+    graft.Memo.owned("unigram_pieces",
+      graft.Memo.fingerprint(d, "documents.parquet"), producer)(
+      trainUnigramFresh(s, d))
   }
 
   private def trainUnigramFresh(s: SparkSession, d: String)

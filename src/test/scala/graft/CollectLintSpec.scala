@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint: `.collect()` in the operator library is a DRIVER
-  * funnel — legitimate only for broadcast-kernel tiers (which declare a
+  * funnel, and so is every call of `Gated.collect` (the gated
+  * broadcast-tier collect) — legitimate only for broadcast-kernel tiers (which declare a
   * beyond-broadcast twin), bounded index METADATA (√n centroid tables,
   * int8 grids), or row-count-independent summaries. Round 9 moved the
   * ANN index builds executor-side; this pin keeps the property: a new
@@ -46,10 +47,8 @@ class CollectLintSpec extends AnyFunSuite {
       "DECLARED broadcast-matrix tier; LSH pair path is the scale twin",
     ("LlmPipeline.scala", "simPairArr") ->
       ("the thresholded cosine pair set memoized for the sim-graph " +
-        "consumers (pagerank/dbscan/cluster_cc) behind the same 1M-row " +
-        "broadcast-tier gate as coPairArr (per-partition take(gate+1) " +
-        "keeps the check inside the one collect job); sim_threshold is " +
-        "the producer and always rebuilds"),
+        "consumers (pagerank/dbscan/cluster_cc) behind the Gated gate; " +
+        "sim_threshold is the producer and always rebuilds"),
     ("LlmPipeline.scala", "dedupEmbeddingCosine") ->
       "broadcast-matrix verdict kernel; dedup_embedding_lsh is the scale twin",
     ("LlmPipeline.scala", "dedupEmbeddingLsh") ->
@@ -91,8 +90,9 @@ class CollectLintSpec extends AnyFunSuite {
     ("Analytics.scala", "sccEdgeArr") ->
       ("the thresholded directed wedge-pair edge set shared by the same " +
         "producer/consumer pair — the same dimension-sized class as the " +
-        "label array (4.2k rows at sf0.1); graph_scc always rebuilds " +
-        "and refreshes, only the condensation reads"),
+        "label array (4.2k rows at sf0.1) behind the Gated gate; " +
+        "graph_scc always rebuilds and refreshes, only the condensation " +
+        "reads"),
     ("Analytics.scala", "recommendAls") ->
       ("the overlapped candidate-input job's ONE-ROW count readout " +
         "(pre-planned on the main thread, awaited in the finally) — " +
@@ -100,14 +100,12 @@ class CollectLintSpec extends AnyFunSuite {
     ("Analytics.scala", "bfsFlatArr") ->
       ("the flattened 16-seed BFS (seed, v, dist) rows (K·|V| bounded, " +
         "~56k at sf0.1) memoized for the three distance-only centrality " +
-        "readouts behind the same 1M-row gate as coPairArr; " +
-        "graph_betweenness_approx is the producer and always rebuilds"),
+        "readouts behind the Gated gate; graph_betweenness_approx is the " +
+        "producer and always rebuilds"),
     ("Analytics.scala", "coPairArr") ->
       ("the canonical thresholded co-order pair-count kernel (3.6k rows " +
-        "at sf0.1), memoized for the whole graph family behind the same " +
-        "1M-row broadcast-tier gate as sccEdgeRows (per-partition " +
-        "take(gate+1) keeps the check inside the one collect job); " +
-        "assoc_pairs is the producer and always rebuilds"),
+        "at sf0.1), memoized for the whole graph family behind the " +
+        "Gated gate; assoc_pairs is the producer and always rebuilds"),
     ("Analytics.scala", "sccFrom") ->
       ("the hybrid tail's remainder core — collected ONLY behind the " +
         "size gate (<= 16384 nodes and <= 1M edges, both counted first), " +
@@ -121,7 +119,10 @@ class CollectLintSpec extends AnyFunSuite {
       ("part-CATALOG union-find (dimension-sized, the knn_cosine " +
         "broadcast adjudication): node ids once, then per-round best " +
         "cut edges — <= live components, halving, <= 2(n-1) rows total " +
-        "(forest-sized); the edge-scoring work stays distributed"))
+        "(forest-sized); the edge-scoring work stays distributed"),
+    ("Gated.scala", "collect") ->
+      ("the broadcast-tier gate itself: one job, at most Rows + 1 rows " +
+        "per partition, None past Rows; each caller is declared above"))
 
   test("collect() appears only in declared broadcast-tier / metadata functions") {
     val defRe = """\s*(?:override\s+)?(?:private(?:\[\w+\])?\s+)?def (\w+)""".r
@@ -137,7 +138,8 @@ class CollectLintSpec extends AnyFunSuite {
     val offenders = files.flatMap { f =>
       val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
       lines.zipWithIndex.collect {
-        case (line, i) if line.contains(".collect()") =>
+        case (line, i)
+            if line.contains(".collect()") || line.contains("Gated.collect(") =>
           val enclosing = (i to 0 by -1).iterator
             .map(j => defRe.findPrefixMatchOf(lines(j)))
             .collectFirst { case Some(m) => m.group(1) }
@@ -149,7 +151,7 @@ class CollectLintSpec extends AnyFunSuite {
       whitelist.contains((file, fn))
     }
     assert(undeclared.isEmpty,
-      "collect() outside the declared broadcast/metadata whitelist — " +
+      "collect() or Gated.collect outside the declared broadcast/metadata whitelist — " +
         "either remove the driver funnel or declare it WITH a scale " +
         s"justification:\n  ${undeclared.mkString("\n  ")}")
     // and the whitelist must not rot: every entry still has a live site

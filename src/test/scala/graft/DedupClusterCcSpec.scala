@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.ops.LlmPipeline
 
-/** dedup_cluster_cc's two tiers and the `sim_pairs` memo it reads: the
+/** dedup_cluster_cc's two tiers over the `sim_pairs` memo it reads: the
   * driver union-find tier must give exactly the min-label loop's rows
   * (no fixture reaches the 1M-pair gate, so the loop is called
-  * directly), and the memo's producer/consumer contract holds. */
+  * directly). The memo's producer/consumer contract is a row of
+  * MemoContractSpec. */
 class DedupClusterCcSpec extends SparkSpec {
 
   /** Both tiers over the same nodes and pairs; asserts equal rows and
@@ -24,33 +23,6 @@ class DedupClusterCcSpec extends SparkSpec {
     val loop = LlmPipeline.ccLoop(nodes, arr.toSeq.toDF("a_id", "b_id", "score"))
     assertSameRows(drv, loop, "driver vs loop:")
     drv.as[(Long, Long)].collect().toSeq
-  }
-
-  /** Spark jobs started from this thread while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = "dedup-cluster-cc-spec"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "jobsDuring")
-    try {
-      body
-      // the listener bus is async; private[spark] is public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("driver tier == min-label loop over the same sim pairs at sf0.01") {
@@ -89,31 +61,5 @@ class DedupClusterCcSpec extends SparkSpec {
         LlmPipeline.simPairs(spark, dir)), "one row:")
     assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       one.map(v => v -> v))
-  }
-
-  test("sim_pairs memo: cold consumer builds, producer always rebuilds, warm consumer is served") {
-    Memo.clear()
-    Memo.drainServed()
-    var cold: DataFrame = null
-    assert(jobsDuring { cold = LlmPipeline.dedupClusterCc(spark, sf01) } > 0,
-      "a cold dedup_cluster_cc must build the pair set")
-    assert(!Memo.drainServed().contains("sim_pairs"))
-    val stored = LlmPipeline.simPairArr(spark, sf01).get
-    assert(Memo.drainServed().contains("sim_pairs"),
-      "the cold consumer did not memoize the pair set")
-
-    assert(jobsDuring(LlmPipeline.simThreshold(spark, sf01)) > 0,
-      "sim_threshold must recompute with a warm memo")
-    assert(!Memo.drainServed().contains("sim_pairs"))
-    val refreshed = LlmPipeline.simPairArr(spark, sf01).get
-    assert(refreshed ne stored, "sim_threshold did not refresh the memo")
-    assert(refreshed.sameElements(stored))
-    Memo.drainServed()
-
-    var warm: DataFrame = null
-    assert(jobsDuring { warm = LlmPipeline.dedupClusterCc(spark, sf01) } == 0,
-      "a served dedup_cluster_cc must run no job while it builds")
-    assert(Memo.drainServed().contains("sim_pairs"))
-    assertSameRows(warm, cold, "served vs cold:")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch harness: sweeps the knn_hnsw_sharded knob frontier
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
 object HnswSweep {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     // exact top-3 truth from the brute rung

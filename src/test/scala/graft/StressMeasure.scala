@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch harness: measures 16×-replication ratios for candidate keys so
   * ScaleStressSpec bounds are MEASURED, not guessed (r9 verdict rule).
   * Run: sbt "Test/runMain graft.StressMeasure key1,key2" — prints
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object StressMeasure {
   def main(args: Array[String]): Unit = {
     val keys = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = Session.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf01 = "/root/testdata/sf0.01"
     val out = java.nio.file.Files.createTempDirectory("graft-stress").toString
