@@ -187,93 +187,8 @@ object Bench {
     val sampleMap = scala.collection.mutable.LinkedHashMap.empty[
       String, scala.collection.mutable.ArrayBuffer[Double]]
     val firstErr = scala.collection.mutable.Map.empty[String, String]
-    // PAIRED mode (r15 verdict task 3): SPARK_GRAFT_PAIRED_REF points at a
-    // BUILT git worktree of the reference commit. After the FIRST
-    // in-process pass, ONE child JVM runs that worktree's graft.Bench
-    // over the same key set with the SAME number of interleaved passes
-    // (cwd = the worktree), so the old block is sandwiched between the
-    // new side's pass 1 and passes 2..N — adjacent contention windows,
-    // the manual interleaved worktree protocol that was the only
-    // trustworthy signal on the contended r15 host, built in. One child
-    // with its own warm passes (NOT a fresh JVM per pass) keeps JIT
-    // parity: both sides' mins come from within-JVM warm runs — a
-    // per-pass RUNS=1 child design measured 2.5-5x inflation on
-    // UNTOUCHED keys purely from per-sample cold JVMs. The artifact
-    // gains "paired_ratio" (min(new samples) / min(old samples), the
-    // protocol's paired-mins estimator) plus the raw old samples; the
-    // quiet-close band test prefers paired_ratio over delta_norm when a
-    // key has one.
-    val pairedRef = sys.env.get("SPARK_GRAFT_PAIRED_REF")
-    val oldSampleMap = scala.collection.mutable.LinkedHashMap.empty[
-      String, scala.collection.mutable.ArrayBuffer[Double]]
-    def refPass(ref: String): Unit =
-      try {
-        val refDir = java.nio.file.Paths.get(ref).toAbsolutePath
-        val here = java.nio.file.Paths.get("").toAbsolutePath.toString
-        // the ref worktree's compiled classes REPLACE this repo's on the
-        // child classpath; everything else (spark jars, scala library)
-        // is shared — no version mixing, the graft namespace resolves
-        // only from the ref build. This repo's classes are dropped by
-        // NAME (an sbt-forked run stages EVERY classpath entry under
-        // target/bg-jobs/, so a startsWith(repoDir) filter would strip
-        // the scala/spark jars too — r17 fix; the project's own code
-        // arrives either as the staged project jar or as the classes
-        // dir, both matched here).
-        val projJar = "trainingfeedkinesisspark"
-        val cp = (refDir.resolve("target/scala-2.13/classes").toString +:
-          System.getProperty("java.class.path")
-            .split(java.io.File.pathSeparator).toSeq
-            .filterNot(p => new java.io.File(p).getName.startsWith(projJar))
-            .filterNot(p => p.replace('\\', '/')
-              .endsWith("target/scala-2.13/classes") &&
-              p.startsWith(here + java.io.File.separator))
-            .filterNot(_ == here)).mkString(java.io.File.pathSeparator)
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        val modOpts = org.apache.spark.launcher.JavaModuleOptions
-          .defaultModuleOptions().split("\\s+").filter(_.nonEmpty).toSeq
-        val xmx = "-Xmx" + (Runtime.getRuntime.maxMemory() >> 20) + "m"
-        val cmd = new java.util.ArrayList[String]()
-        (Seq(javaBin, xmx) ++ modOpts ++ Seq("-cp", cp, "graft.Bench"))
-          .foreach(cmd.add)
-        val pb = new ProcessBuilder(cmd)
-        pb.directory(refDir.toFile)
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(java.lang.ProcessBuilder.Redirect.appendTo(
-          refDir.resolve("bench_paired_child.log").toFile))
-        val env = pb.environment()
-        env.put("SPARK_GRAFT_SF_DIR", sfDir)
-        env.put("SPARK_GRAFT_RUNS", runs.toString)
-        env.put("SPARK_GRAFT_CPUS", cpus)
-        env.put("SPARK_GRAFT_ONLY", order.mkString(","))
-        env.remove("SPARK_GRAFT_PAIRED_REF") // never recurse
-        val rc = pb.start().waitFor()
-        if (rc == 0) {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val root = om.readTree(java.nio.file.Files.readAllBytes(
-            refDir.resolve("BENCH_FULL.json")))
-          // prefer the child's raw per-pass samples (so paired_old shows
-          // the old side's full distribution); fall back to the min map
-          // for ref builds predating the samples field
-          val node = Option(root.get("samples")).getOrElse(root.get("queries"))
-          Option(node).foreach { qs =>
-            val it = qs.fields()
-            while (it.hasNext) {
-              val e = it.next()
-              val buf = oldSampleMap.getOrElseUpdate(e.getKey,
-                scala.collection.mutable.ArrayBuffer.empty)
-              if (e.getValue.isArray)
-                e.getValue.forEach(v => buf += v.asDouble)
-              else buf += e.getValue.asDouble
-            }
-          }
-        } else System.err.println(
-          s"[bench] paired ref pass failed rc=$rc — see bench_paired_child.log")
-      } catch { case e: Throwable =>
-        System.err.println("[bench] paired ref pass error: " + e)
-      }
     var qIdx = 0
-    for (pass <- 1 to runs) {
+    for (_ <- 1 to runs) {
       for (name <- order) {
         once(name, selected(name)) match {
           case Right(t) =>
@@ -284,7 +199,6 @@ object Bench {
         qIdx += 1
         if (qIdx % CalibEvery == 0) calibSeries += ((qIdx, calibOnce()))
       }
-      if (pass == 1) pairedRef.foreach(refPass)
     }
     // CORE-SCALING PROBE (r17, verdict task 2): a fixed CPU-bound
     // workload of 256 independent tasks (~30 ms of serial integer mixing
@@ -294,8 +208,8 @@ object Bench {
     // of them core-INSENSITIVE at bench SF by design (the documented
     // 100 TB shape is thousands of partitions); this key demonstrates
     // in the artifact itself that the harness honors $SPARK_GRAFT_CPUS.
-    // Skipped under SPARK_GRAFT_ONLY so filtered/paired A/B runs stay
-    // clean. Deterministic (pure function of the task index).
+    // Skipped under SPARK_GRAFT_ONLY so filtered runs stay clean.
+    // Deterministic (pure function of the task index).
     val probeKey = "scale_probe_cpu"
     if (only.forall(_.contains(probeKey))) {
       def probeOnce(): Double = {
@@ -379,23 +293,7 @@ object Bench {
     }
     val memoJson = memoServed.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val pairedJson =
-      if (pairedRef.isEmpty || oldSampleMap.isEmpty) ""
-      else {
-        val ratios = order.flatMap { k =>
-          for {
-            ns <- sampleMap.get(k)
-            os <- oldSampleMap.get(k)
-            if ns.nonEmpty && os.nonEmpty
-          } yield "\"" + k + "\":" + fmt(ns.min / math.max(os.min, 1e-4))
-        }.mkString("{", ",", "}")
-        val oldS = oldSampleMap.toSeq.sortBy(_._1).map { case (k, ss) =>
-          "\"" + k + "\":[" + ss.map(fmt).mkString(",") + "]"
-        }.mkString("{", ",", "}")
-        s""","paired_ratio":$ratios,"paired_old":$oldS""" +
-          s""","paired_ref":"${esc(pairedRef.get)}""""
-      }
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","nq":${ok.size},"cpus":$cpus,"shuffle_partitions":$cpus,"calib_sec":${fmt(calib)},"calib_min":${fmt(calibMin)},"value_per_calib":${fmt(totalPerCalib)},"calib_series":$calibJson,"queries":$fullQs,"samples":$fullSamples,"spread":$fullSpread,"memo_served":$memoJson$deltaJson$pairedJson,"errors":$fullEs,"n_err":${errs.size},"runs_per_query":$runs,"interleaved":true,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","nq":${ok.size},"cpus":$cpus,"shuffle_partitions":$cpus,"calib_sec":${fmt(calib)},"calib_min":${fmt(calibMin)},"value_per_calib":${fmt(totalPerCalib)},"calib_series":$calibJson,"queries":$fullQs,"samples":$fullSamples,"spread":$fullSpread,"memo_served":$memoJson$deltaJson,"errors":$fullEs,"n_err":${errs.size},"runs_per_query":$runs,"interleaved":true,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (full + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // read-only cwd must not kill the bench

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -135,10 +136,7 @@ case class BitmapDistinct(
 }
 
 object BitmapDistinct {
-  /** Idempotent per-session SQL registration as `graft_bitmap(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitmap",
-      (children: Seq[Expression]) => BitmapDistinct(children.head).toAggregateExpression(),
-      "built-in")
+  /** The `graft_bitmap(c)` aggregate as a Column. */
+  def col(c: Column): Column =
+    column(BitmapDistinct(expression(c)).toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -70,9 +71,6 @@ object DHash {
     h
   }
 
-  /** Idempotent per-session registration (DotProduct's convention). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dhash", (children: Seq[Expression]) => DHash(children.head),
-      "built-in")
+  /** `graft_dhash(text)` as a Column. */
+  def col(text: Column): Column = column(DHash(expression(text)))
 }

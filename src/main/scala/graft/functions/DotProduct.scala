@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Reverse}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Reverse}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -85,18 +84,9 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-
-  /** Idempotent per-session registration (temp function + optimizer rule):
-    * usable on any already-built session — the query builders call this so
-    * the driver's session needs no special construction. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (children: Seq[Expression]) => DotProduct(children(0), children(1)),
-      "built-in")
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[DotReverseElimination.type]))
-      spark.experimental.extraOptimizations = cur :+ DotReverseElimination
-  }
+  /** `graft_dot(a, b)` as a Column. */
+  def col(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 }
 
 /** Domain optimizer rule (the `Rule[LogicalPlan]` rung): a dot product is
@@ -109,40 +99,4 @@ object DotReverseElimination extends Rule[LogicalPlan] {
     plan.transformAllExpressions {
       case DotProduct(Reverse(l), Reverse(r)) => DotProduct(l, r)
     }
-}
-
-/** Production-style registration through SparkSessionExtensions:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` makes
-  * every graft custom component first-class on each session of the
-  * cluster — the scalar expression (`graft_dot`), the sketch aggregate
-  * (`graft_hll`), and the as-of join planner strategy. The query builders
-  * also self-register per session, so a plain SparkSession works too. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dhash"),
-      new ExpressionInfo(classOf[DHash].getName, "graft_dhash"),
-      (children: Seq[Expression]) => DHash(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_morton"),
-      new ExpressionInfo(classOf[MortonCode].getName, "graft_morton"),
-      (children: Seq[Expression]) => MortonCode(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hll"),
-      new ExpressionInfo(classOf[HllSketch].getName, "graft_hll"),
-      (children: Seq[Expression]) =>
-        HllSketch(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bitmap"),
-      new ExpressionInfo(classOf[BitmapDistinct].getName, "graft_bitmap"),
-      (children: Seq[Expression]) =>
-        BitmapDistinct(children.head).toAggregateExpression()))
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(_ => DotReverseElimination)
-  }
 }

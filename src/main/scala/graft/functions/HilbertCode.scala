@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -87,10 +88,7 @@ object HilbertCode {
   /** The expression's fixed order-16 form (low 16 bits per key). */
   def encode16(x: Long, y: Long): Long = encode(16, x, y)
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hilbert",
-      (children: Seq[Expression]) => HilbertCode(children(0), children(1)),
-      "built-in")
+  /** `graft_hilbert(x, y)` as a Column. */
+  def col(x: Column, y: Column): Column =
+    column(HilbertCode(expression(x), expression(y)))
 }

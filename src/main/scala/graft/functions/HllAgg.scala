@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -93,12 +94,9 @@ case class HllSketch(
 }
 
 object HllSketch {
-  /** Idempotent per-session SQL registration as `graft_hll(col)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll",
-      (children: Seq[Expression]) => HllSketch(children.head).toAggregateExpression(),
-      "built-in")
+  /** The `graft_hll(c)` aggregate as a Column. */
+  def col(c: Column): Column =
+    column(HllSketch(expression(c)).toAggregateExpression())
 
   /** The estimator over raw registers — shared by the aggregate's eval
     * and driver-side sketch ALGEBRA (union-merge of returned register
@@ -167,9 +165,7 @@ case class HllRegisters(
 }
 
 object HllRegisters {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll_regs",
-      (children: Seq[Expression]) => HllRegisters(children.head).toAggregateExpression(),
-      "built-in")
+  /** The `graft_hll_regs(c)` aggregate as a Column. */
+  def col(c: Column): Column =
+    column(HllRegisters(expression(c)).toAggregateExpression())
 }

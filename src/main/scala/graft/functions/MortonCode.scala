@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -67,10 +68,7 @@ object MortonCode {
   def interleave(x: Long, y: Long): Long =
     spread(x) | (spread(y) << 1)
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_morton",
-      (children: Seq[Expression]) => MortonCode(children(0), children(1)),
-      "built-in")
+  /** `graft_morton(x, y)` as a Column. */
+  def col(x: Column, y: Column): Column =
+    column(MortonCode(expression(x), expression(y)))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -212,11 +213,7 @@ object TDigestQuantile {
     }
   }
 
-  /** Idempotent per-session SQL registration as `graft_tdigest(col, q)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tdigest",
-      (children: Seq[Expression]) =>
-        TDigestQuantile(children.head, children(1)).toAggregateExpression(),
-      "built-in")
+  /** The `graft_tdigest(c, q)` aggregate as a Column. */
+  def col(c: Column, q: Column): Column =
+    column(TDigestQuantile(expression(c), expression(q)).toAggregateExpression())
 }

@@ -2717,7 +2717,6 @@ object Analytics {
     // Readout inputs that do not depend on the factors, built before the
     // static region: the memo-tier co-order edges (the producer path runs
     // its own jobs — keep them under the caller's AQE setting).
-    graft.functions.DotProduct.register(s)
     val co = coEdges(s, d)
     val coSym = co.union(co.select(col("p2"), col("p1"))).toDF("item", "cand")
     var userF: DataFrame = null
@@ -2855,7 +2854,7 @@ object Analytics {
       .join(userF.select(col("id").as("user"), col("q").as("p")), "user")
       .join(itemF.select(col("id").as("item"), col("q")), "item")
       .select(col("user"), col("item"),
-        (floor(call_function("graft_dot", col("p"), col("q")) * 10000 + 0.5) /
+        (floor(graft.functions.DotProduct.col(col("p"), col("q")) * 10000 + 0.5) /
           10000).as("score"))
     graft.plans.TopKPerGroup.topK(scored, "user", "score", "item", 5)
       .select(col("user").as("c_custkey"), col("rn"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.Det.round
+import graft.functions.{BitmapDistinct, HllRegisters, HllSketch, TDigestQuantile}
 import graft.io.Tables
 
 /** Custom typed-aggregation surface (SURVEY.md §2.4 agg_custom_typed /
@@ -46,10 +47,9 @@ object Custom {
   /** Custom HLL sketch (TypedImperativeAggregate) per event_type —
     * oracle-exempt (sketch); ScalaTest asserts ±5% of exact. */
   def aggHllCustom(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HllSketch.register(s)
     Tables.events(s, d)
       .groupBy(col("event_type"))
-      .agg(call_function("graft_hll", col("user_id")).as("hll_users"))
+      .agg(HllSketch.col(col("user_id")).as("hll_users"))
       .orderBy(col("event_type"))
   }
 
@@ -65,12 +65,11 @@ object Custom {
     * overlap coefficient within ±0.05 of the exact kernel's. */
   def audienceOverlapHll(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.HllRegisters.register(s)
     val sketches = Tables.events(s, d)
       .groupBy(col("event_type"))
-      .agg(call_function("graft_hll_regs", col("user_id")).as("regs"))
+      .agg(HllRegisters.col(col("user_id")).as("regs"))
       .as[(String, Array[Byte])].collect().sortBy(_._1)
-    val H = graft.functions.HllSketch
+    val H = HllSketch
     val rows = for {
       i <- sketches.indices
       j <- (i + 1) until sketches.length
@@ -97,10 +96,9 @@ object Custom {
     * level's estimate within ±5% of the exact distinct AND the plan to
     * one Expand (no per-level re-scan). */
   def aggHllRollup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HllSketch.register(s)
     Tables.events(s, d)
       .rollup(col("event_type"))
-      .agg(call_function("graft_hll", col("user_id")).as("hll_users"))
+      .agg(HllSketch.col(col("user_id")).as("hll_users"))
       .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
         col("hll_users"))
       .orderBy(col("event_type"))
@@ -112,10 +110,9 @@ object Custom {
     * custom TypedImperativeAggregate living under the same correctness
     * gate as the built-ins. */
   def aggBitmapDistinct(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BitmapDistinct.register(s)
     Tables.events(s, d)
       .groupBy(col("event_type"))
-      .agg(call_function("graft_bitmap", col("user_id")).as("n_users"))
+      .agg(BitmapDistinct.col(col("user_id")).as("n_users"))
       .orderBy(col("event_type"))
   }
 
@@ -125,12 +122,11 @@ object Custom {
     * with any t-digest); CustomSurfaceSpec bounds both quantiles against
     * exact percentile. */
   def aggTdigest(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TDigestQuantile.register(s)
     Tables.events(s, d)
       .groupBy(col("event_type"))
       .agg(
-        call_function("graft_tdigest", col("value"), lit(0.5)).as("p50_approx"),
-        call_function("graft_tdigest", col("value"), lit(0.95)).as("p95_approx"))
+        TDigestQuantile.col(col("value"), lit(0.5)).as("p50_approx"),
+        TDigestQuantile.col(col("value"), lit(0.95)).as("p95_approx"))
       .orderBy(col("event_type"))
   }
 

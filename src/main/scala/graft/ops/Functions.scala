@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Det.round
+import graft.functions.{DotProduct, HilbertCode, MortonCode}
 import graft.io.Tables
 
 /** Scalar-function families (SURVEY.md §2.8): one query per family, each a
@@ -195,13 +196,12 @@ object Functions {
     * custom-operator rung above UDFs. Oracle-gated: identical fold order
     * to DuckDB list_sum. */
   def fnVectorNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d)
       .select(
         col("vec_id"),
-        round(call_function("graft_dot", col("embedding"), col("embedding")), 4)
+        round(DotProduct.col(col("embedding"), col("embedding")), 4)
           .as("norm_sq"),
-        round(call_function("graft_dot", col("embedding"), reverse(col("embedding"))), 4)
+        round(DotProduct.col(col("embedding"), reverse(col("embedding"))), 4)
           .as("dot_rev"))
       .orderBy(col("vec_id"))
   }
@@ -215,10 +215,9 @@ object Functions {
     * oracle's bit arithmetic stays in signed-64 range; the expression
     * itself interleaves 32+32. */
   def layoutZorder(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MortonCode.register(s)
     Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        call_function("graft_morton",
+        MortonCode.col(
           pmod(col("l_orderkey"), lit(65536L)),
           pmod(col("l_partkey"), lit(65536L))).as("zkey"))
       .orderBy(col("zkey"), col("l_orderkey"), col("l_linenumber"))
@@ -233,10 +232,9 @@ object Functions {
     * DuckDB twin replays the identical 16-step quadrant fold as a
     * recursive CTE, so the whole curve is oracle-gated. */
   def layoutHilbert(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HilbertCode.register(s)
     Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        call_function("graft_hilbert",
+        HilbertCode.col(
           pmod(col("l_orderkey"), lit(65536L)),
           pmod(col("l_partkey"), lit(65536L))).as("hkey"))
       .orderBy(col("hkey"), col("l_orderkey"), col("l_linenumber"))
@@ -268,8 +266,6 @@ object Functions {
     * ordering claims (hilbert_pk < 0.6·linear_pk, linear_ok minimal,
     * every extent in (0,1]) and determinism. */
   def layoutPruningStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.MortonCode.register(s)
-    graft.functions.HilbertCode.register(s)
     val raw = Tables.lineitem(s, d).select(
       pmod(col("l_orderkey"), lit(65536L)).as("ok"),
       pmod(col("l_partkey"), lit(65536L)).as("pk"))
@@ -292,7 +288,7 @@ object Functions {
     // boundary sampling seeds on the RDD id, so two runs in one JVM cut
     // different boundaries — arithmetic cells are deterministic, need no
     // shuffle beyond the tiny groupBy, and measure the same geometry.)
-    def boxes(layout: String, fileId: org.apache.spark.sql.Column): DataFrame =
+    def boxes(layout: String, fileId: Column): DataFrame =
       base.withColumn("f", fileId)
         .groupBy(col("f"))
         .agg(min(col("ok")).as("ok_lo"), max(col("ok")).as("ok_hi"),
@@ -310,11 +306,13 @@ object Functions {
               .cast("double") * 1e6 + 0.5) / 1e6).as("avg_extent_pk"))
     // linear: 16 slices of the (scaled) orderkey; curves: 16 slices of
     // the 32-bit curve position — both via exact integer division
+    def curveFile(curve: Column): Column =
+      call_function("div", curve, lit(268435456))
     boxes("1_linear", expr("oks * 16 div 65536"))
-      .unionAll(boxes("2_zorder", expr(
-        "graft_morton(oks, pks) div 268435456")))
-      .unionAll(boxes("3_hilbert", expr(
-        "graft_hilbert(oks, pks) div 268435456")))
+      .unionAll(boxes("2_zorder",
+        curveFile(MortonCode.col(col("oks"), col("pks")))))
+      .unionAll(boxes("3_hilbert",
+        curveFile(HilbertCode.col(col("oks"), col("pks")))))
       .orderBy(col("layout"))
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det.round
+import graft.functions.{DHash, DotProduct}
 import graft.io.Tables
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.10 + the north-star
@@ -738,7 +739,6 @@ object LlmPipeline {
     * kernel to mirror; the recall/score pins are the gate. */
   def knnQuantized(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.DotProduct.register(s)
     val nCand = 32
     // index build is executor-side: per-partition quantization, the
     // driver only ever holds (id, int8 codes, scale) — never fp32
@@ -778,7 +778,7 @@ object LlmPipeline {
       .join(emb.toDF("a_id", "a_emb"), "a_id")
       .join(emb.toDF("b_id", "b_emb"), "b_id")
       .select(col("a_id"), col("b_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
     graft.plans.TopKPerGroup.topK(scored, "a_id", "score", "b_id", 3)
       .select(col("a_id").as("vec_id"), col("rn"), col("b_id"), col("score"))
@@ -812,7 +812,6 @@ object LlmPipeline {
 
   def knnBinaryHamming(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.DotProduct.register(s)
     val nCand = 32
     // index build is executor-side; the driver holds only (id, 8-byte
     // sign word) — the 32×-smaller binary matrix (declared broadcast
@@ -837,7 +836,7 @@ object LlmPipeline {
       .join(emb.toDF("a_id", "a_emb"), "a_id")
       .join(emb.toDF("b_id", "b_emb"), "b_id")
       .select(col("a_id"), col("b_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
     graft.plans.TopKPerGroup.topK(scored, "a_id", "score", "b_id", 3)
       .select(col("a_id").as("vec_id"), col("rn"), col("b_id"), col("score"))
@@ -892,7 +891,6 @@ object LlmPipeline {
     * training and encoding run on executors. Oracle-exempt. */
   def knnPq(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.DotProduct.register(s)
     val m = 8
     val nCand = 32
     val v = vecs(s, d).localCheckpoint()
@@ -930,7 +928,7 @@ object LlmPipeline {
       .join(emb.toDF("a_id", "a_emb"), "a_id")
       .join(emb.toDF("b_id", "b_emb"), "b_id")
       .select(col("a_id"), col("b_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
     graft.plans.TopKPerGroup.topK(scored, "a_id", "score", "b_id", 3)
       .select(col("a_id").as("vec_id"), col("rn"), col("b_id"), col("score"))
@@ -1194,7 +1192,6 @@ object LlmPipeline {
     * determinism. */
   def knnIvfPq(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.DotProduct.register(s)
     val m = 8
     val nCand = 32
     val nProbe = 3
@@ -1272,7 +1269,7 @@ object LlmPipeline {
       .join(emb.toDF("a_id", "a_emb"), "a_id")
       .join(emb.toDF("b_id", "b_emb"), "b_id")
       .select(col("a_id"), col("b_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
     graft.plans.TopKPerGroup.topK(scored, "a_id", "score", "b_id", 3)
       .select(col("a_id").as("vec_id"), col("rn"), col("b_id"), col("score"))
@@ -1642,7 +1639,6 @@ object LlmPipeline {
   private[graft] def scoreAgainstEmbeddingIndex(
       s: SparkSession, arriving: DataFrame, corpus: DataFrame,
       cellIdx: DataFrame, k: Int, threshold: Double): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val cand = embeddingCellsOf(s, arriving, k).toDF("cell", "vec_id")
       .join(cellIdx, Seq("cell"))
       .select(col("vec_id"), col("corpus_id")).distinct()
@@ -1650,7 +1646,7 @@ object LlmPipeline {
       .join(corpus.toDF("corpus_id", "b_emb"), "corpus_id")
       .join(arriving.toDF("vec_id", "a_emb"), "vec_id")
       .select(col("vec_id"), col("corpus_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
       .where(col("score") >= threshold)
       .groupBy(col("vec_id"))
@@ -1859,7 +1855,6 @@ object LlmPipeline {
     * optimization, not a semantic. */
   def knnLshJoined(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.DotProduct.register(s)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val nVec = emb.count()
     val k = math.min(24, math.max(4,
@@ -1910,7 +1905,7 @@ object LlmPipeline {
       .join(emb.toDF("a_id", "a_emb"), "a_id")
       .join(emb.toDF("b_id", "b_emb"), "b_id")
       .select(col("a_id"), col("b_id"),
-        (floor(expr("graft_dot(a_emb, b_emb)") * 10000 + 0.5) / 10000)
+        (floor(DotProduct.col(col("a_emb"), col("b_emb")) * 10000 + 0.5) / 10000)
           .as("score"))
     graft.plans.TopKPerGroup.topK(scored, "a_id", "score", "b_id", 3)
       .select(col("a_id").as("vec_id"), col("rn"), col("b_id"), col("score"))
@@ -2249,7 +2244,6 @@ object LlmPipeline {
       s: SparkSession, d: String, dir: String): Unit = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val corpusDocs = docs.where(col("doc_id") % 2 === 0)
-    graft.functions.DHash.register(s)
     val corpusVecs = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"))
       .where(col("vec_id") % 2 === 0)
@@ -2275,7 +2269,7 @@ object LlmPipeline {
       () => curateDigestIndexOf(corpusDocs)
         .write.mode("overwrite").parquet(s"$dir/digest_index.parquet"),
       () => phashBandsOf(corpusDocs.where(length(col("text")) >= 1)
-          .select(col("doc_id"), expr("graft_dhash(text)").as("phash")))
+          .select(col("doc_id"), DHash.col(col("text")).as("phash")))
         .write.mode("overwrite").parquet(s"$dir/phash_bands.parquet"),
       () => embeddingCellsOf(s, corpusVecs, cellBits)
         .toDF("cell", "corpus_id")
@@ -2297,11 +2291,10 @@ object LlmPipeline {
 
   private[graft] def probePhashIndex(
       s: SparkSession, d: String, dir: String): DataFrame = {
-    graft.functions.DHash.register(s)
     scoreAgainstPhashIndex(
       Tables.documents(s, d)
         .where(length(col("text")) >= 1 && col("doc_id") % 2 === 1)
-        .select(col("doc_id"), expr("graft_dhash(text)").as("phash")),
+        .select(col("doc_id"), DHash.col(col("text")).as("phash")),
       s.read.parquet(s"$dir/phash_bands.parquet"))
   }
 
@@ -3373,10 +3366,9 @@ object LlmPipeline {
     // native codegen'd signature — one codepoint decode per row instead
     // of the interpreted 63-substring HOF; bit parity with the SQL form
     // (and the DuckDB twin) pinned in Round9bSpec
-    graft.functions.DHash.register(s)
     val ph = graft.Caches.track(Tables.documents(s, d)
       .where(length(col("text")) >= 1)
-      .select(col("doc_id"), expr("graft_dhash(text)").as("phash"))
+      .select(col("doc_id"), DHash.col(col("text")).as("phash"))
       .persist())
     phashNearCounts(ph)
   }
@@ -3642,10 +3634,9 @@ object LlmPipeline {
     * stays non-vacuous on a corpus with no natural near-dups
     * (Round9bSpec plants one and pins the probe finds it). */
   def dedupPhashIncremental(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DHash.register(s)
     val ph = Tables.documents(s, d)
       .where(length(col("text")) >= 1)
-      .select(col("doc_id"), expr("graft_dhash(text)").as("phash"))
+      .select(col("doc_id"), DHash.col(col("text")).as("phash"))
     val corpusIdx = graft.Caches.track(
       phashBandsOf(ph.where(col("doc_id") % 2 === 0)).persist())
     scoreAgainstPhashIndex(ph.where(col("doc_id") % 2 === 1), corpusIdx)

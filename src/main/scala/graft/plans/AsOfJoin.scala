@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, BindReferences, Expression, JoinedRow, SortOrder,
@@ -146,16 +146,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOfJoin {
 
-  /** Inject the strategy into an existing session (idempotent) — the
-    * public `experimental.extraStrategies` hook, so the driver's plain
-    * SparkSession needs no special construction. Production clusters set
-    * `spark.sql.extensions=graft.functions.GraftExtensions` instead. */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[AsOfJoinStrategy.type]))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** DataFrame-level API: as-of join `left` to `right`, matching each left
     * row to the latest right row with `right.on <= left.on` within the same
     * `by` group; ties on `on` broken by the greatest `tie`. Column names
@@ -164,7 +154,7 @@ object AsOfJoin {
       leftDf: DataFrame, rightDf: DataFrame,
       by: (String, String), on: (String, String), tie: (String, String)): DataFrame = {
     val spark = leftDf.sparkSession
-    ensureStrategy(spark)
+    graft.functions.Catalog.install(spark)
     val lp = leftDf.queryExecution.analyzed
     val rp = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeReference, BindReferences, Descending,
@@ -214,17 +214,11 @@ object TopKStrategy extends SparkStrategy {
 
 object TopKPerGroup {
 
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[TopKStrategy.type]))
-      spark.experimental.extraStrategies = cur :+ TopKStrategy
-  }
-
   /** DataFrame-level API: keep the top `k` rows per `group`, ranked by
     * (`order` DESC, `tie` ASC), with the rank appended as column "rn". */
   def topK(df: DataFrame, group: String, order: String, tie: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
+    graft.functions.Catalog.install(spark)
     val lp = df.queryExecution.analyzed
     def attr(n: String): Attribute =
       lp.output.find(_.name == n).getOrElse(

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal private[sql] bridge: turn a custom LogicalPlan into a DataFrame.
@@ -12,6 +13,12 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A Catalyst expression as a Column, and back — how the native
+    * graft_* expressions reach the DataFrame API without a registry
+    * lookup by name (`ExpressionUtils` is private[sql]). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
   /** Native bloom-membership predicate: Spark's own codegen'd
     * `BloomFilterMightContain` (the runtime-filter expression) over a
     * serialized `util.sketch.BloomFilter` — the engine ships no public
@@ -20,10 +27,9 @@ object GraftBridge {
     * a Literal (each executor lazily deserializes once); the value side
     * must be LongType. */
   def bloomMightContain(filterBytes: Array[Byte], value: Column): Column =
-    classic.ExpressionUtils.column(
-      catalyst.expressions.BloomFilterMightContain(
-        catalyst.expressions.Literal(filterBytes, types.BinaryType),
-        classic.ExpressionUtils.expression(value)))
+    column(catalyst.expressions.BloomFilterMightContain(
+      catalyst.expressions.Literal(filterBytes, types.BinaryType),
+      expression(value)))
 
   /** Flatten a physical plan INCLUDING adaptive wrappers. Under AQE
     * (default-on), `executedPlan` is an `AdaptiveSparkPlanExec` — a

@@ -65,7 +65,7 @@ class CustomSurfaceSpec extends SparkSpec {
   }
 
   test("graft_bitmap merges sparse distant pages across many partitions") {
-    graft.functions.BitmapDistinct.register(spark)
+    graft.functions.Catalog.install(spark)
     import spark.implicits._
     // ids land on far-apart 32 k pages (page 0, ~page 30 k, ~page 3 M) with
     // duplicates, shuffled over 16 partitions — partial buffers must OR
@@ -94,7 +94,7 @@ class CustomSurfaceSpec extends SparkSpec {
   }
 
   test("graft_dot native expression equals the HOF fold bit-for-bit") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Catalog.install(spark)
     val native = Functions.fnVectorNative(spark, sf001).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     val hof = Tables.embeddings(spark, sf001)
@@ -173,7 +173,7 @@ class CustomSurfaceSpec extends SparkSpec {
   test("graft_morton equals a JVM reference interleave and runs in codegen") {
     import spark.implicits._
     import org.apache.spark.sql.functions.call_function
-    graft.functions.MortonCode.register(spark)
+    graft.functions.Catalog.install(spark)
     val rnd = new scala.util.Random(7)
     val pairs = Seq.fill(200)((rnd.nextLong().abs % 4294967296L,
       rnd.nextLong().abs % 4294967296L))
@@ -199,7 +199,7 @@ class CustomSurfaceSpec extends SparkSpec {
     // prunes on.
     import spark.implicits._
     val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)).toDF("x", "y")
-    graft.functions.MortonCode.register(spark)
+    graft.functions.Catalog.install(spark)
     val sorted = grid
       .select($"x", $"y", call_function("graft_morton", $"x", $"y").as("z"))
       .orderBy($"z").collect()
@@ -307,7 +307,7 @@ class CustomSurfaceSpec extends SparkSpec {
   }
 
   test("DotReverseElimination rule rewrites dot(reverse,reverse) to dot") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Catalog.install(spark)
     val df = Tables.embeddings(spark, sf001)
       .selectExpr("vec_id", "graft_dot(reverse(embedding), reverse(embedding)) AS v")
     val optimized = df.queryExecution.optimizedPlan.toString

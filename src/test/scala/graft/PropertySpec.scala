@@ -125,7 +125,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_dot equals a JVM reference fold on random vectors (incl. ragged lengths)") {
-    graft.functions.DotProduct.register(spark)
+    graft.functions.Catalog.install(spark)
     val rnd = new scala.util.Random(7)
     val rows: Seq[(Long, Array[Float], Array[Float])] = Seq.tabulate(200) { i =>
       // ragged lengths exercise the min-length truncation both paths share

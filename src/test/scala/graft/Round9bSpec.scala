@@ -154,7 +154,7 @@ class Round9bSpec extends SparkSpec {
     // the codegen'd signature must match the interpreted form the oracle
     // twin mirrors — on the real fixture (incl. zh codepoints) at both
     // unit SFs
-    graft.functions.DHash.register(spark)
+    graft.functions.Catalog.install(spark)
     for (d <- Seq(sf001, sf01)) {
       val both = io.Tables.documents(spark, d)
         .where(length(col("text")) >= 1)

@@ -521,19 +521,13 @@ class ScaleStressSpec extends SparkSpec {
         "per-key ratios are not attributable; rule applies to quiet closes")
     val qs = section("queries")
     val spreads = section("spread")
-    // Paired ratios (r15 verdict task 3) are contention-immune — old and
-    // new run in adjacent windows of the same host — so when a key has
-    // one it OVERRIDES the calib-normalized delta for the band check.
-    val paired = section("paired_ratio")
     val offenders = deltas.toSeq
-      .map { case (k, dn) => (k, paired.getOrElse(k, dn), paired.contains(k)) }
       .sortBy(-_._2).collect {
-        case (k, r, isPaired) if r > 2.0 &&
+        case (k, r) if r > 2.0 &&
           qs.getOrElse(k, 0.0) >= 0.5 &&
           spreads.getOrElse(k, 1.0) < 1.3 &&
           !declaredRegressions.contains(k) =>
-          val label = if (isPaired) "paired_ratio" else "delta_norm"
-          f"$k ($label $r%.2f, ${qs(k)}%.2fs, spread ${spreads.getOrElse(k, 1.0)}%.2f)"
+          f"$k (delta_norm $r%.2f, ${qs(k)}%.2fs, spread ${spreads.getOrElse(k, 1.0)}%.2f)"
       }
     info(s"${deltas.size} keys compared; " +
       s"${deltas.count(_._2 > 2.0)} above band before exemptions")
