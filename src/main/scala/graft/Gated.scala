@@ -15,7 +15,12 @@ import org.apache.spark.sql.Dataset
   * - Known risk: with P partitions the driver can receive up to
   *   P × (Rows + 1) rows before it decides, which a few dozen full
   *   partitions push past the default 1g `spark.driver.maxResultSize`;
-  *   there the job aborts instead of returning `None`. */
+  *   there the job aborts instead of returning `None`.
+  *
+  * The IVF tier check (`LlmPipeline.ivfDriverVecs`, 4096 vectors) does
+  * not come here: it reads a parquet table, where `limit(gate + 1)`
+  * stops after about gate + 1 rows in one job, while this collect would
+  * ship gate + 1 rows from every partition. */
 object Gated {
 
   /** The broadcast-tier row gate (1M rows). */

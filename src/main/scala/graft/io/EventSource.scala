@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   *
   * Kinesis semantics modeled by the replay: per-shard ordering (shard key =
   * user_id % nShards — the partition-key role), at-least-once delivery
-  * (dedup via dropDuplicatesWithinWatermark downstream), approximate
-  * arrival time (ts column).
+  * (dedup via dropDuplicatesWithinWatermark downstream, in
+  * `Streaming.dedupTransform`: a re-delivery later than the watermark
+  * delay passes through), approximate arrival time (ts column).
   */
 trait EventSource {
   /** Streaming DataFrame with the event envelope schema. */

@@ -648,59 +648,70 @@ object LlmPipeline {
       (id, qs, amax)
     }
 
-  /** Executor-side IVF coarse-quantizer build — the index construction
-    * itself is distributed (at 100 TB the training vectors never visit
-    * the driver; only the √n-row centroid table — the index METADATA —
-    * is collected for broadcast):
-    *  1. SEEDS: the min-id vector per id-hash bucket, one mergeable
-    *     reduceGroups shuffle (deterministic under any partitioning);
-    *  2. one LLOYD STEP: every vector assigns to its nearest seed
-    *     map-side (seeds broadcast), then per-cell per-dimension means
-    *     via partial aggregation — sums ride a 1e-6 integer grid so
-    *     shuffle-fetch merge order cannot perturb the low bits
-    *     (seq_markov_perplexity's determinism trick);
-    *  3. centroids L2-normalize on the driver (√n rows) so dot-ranking
-    *     is cosine against the cell DIRECTION — unnormalized cell means
-    *     would let cell-norm skew decide assignments.
-    * Production swaps step 2 for a few sampled-k-means rounds; the
-    * broadcast/assign shape is identical. */
-  private def ivfCentroids(
-      v: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-      nCells: Int): Array[(Long, Array[Float])] = {
-    val s = v.sparkSession
-    import s.implicits._
-    val seeds = v
-      .groupByKey { case (id, _) =>
-        // hash-mixed buckets: strided id layouts would collapse raw
-        // floorMod onto few buckets and starve the seed set
-        math.floorMod(scala.util.hashing.byteswap64(id), nCells.toLong)
-      }
-      .reduceGroups((a, b) => if (a._1 <= b._1) a else b)
-      .map { case (cell, (_, e)) => (cell, e) }
-      .collect().sortBy(_._1)
-    val bcSeeds = graft.Broadcasts.track(s.sparkContext.broadcast(seeds))
-    val assigned = v.map { case (_, e) =>
-      val ss = bcSeeds.value
-      var best = 0
-      var bs = Double.MinValue
-      var i = 0
-      while (i < ss.length) {
-        val sim = dot(e, ss(i)._2)
-        if (sim > bs) { bs = sim; best = i }
-        i += 1
-      }
-      (ss(best)._1, e)
-    }.toDF("cell", "embedding")
-    val means = assigned
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cell"), col("pos"))
-      .agg((sum((col("v").cast("double") * 1e6).cast("long")).cast("double") /
-        (lit(1e6) * count(lit(1)))).as("m"))
-      .groupBy(col("cell"))
-      .agg(collect_list(struct(col("pos"), col("m"))).as("pm"))
-      .select(col("cell"),
-        expr("transform(array_sort(pm), x -> cast(x.m as float))").as("c"))
-      .as[(Long, Array[Float])].collect()
+  /** IVF cell count: ∝ √n keeps occupancy (and per-query scoring) at
+    * O(√n) — the classical IVF sizing; a fixed cell count degrades to
+    * quadratic as the collection grows (measured 18× at a 10×
+    * replication before it). */
+  private def ivfNCells(nVec: Long): Int =
+    math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+
+  /** IVF seed bucket of a vector id — hash-mixed, because strided id
+    * layouts would collapse raw floorMod onto few buckets and starve the
+    * seed set. */
+  private def ivfSeedBucket(id: Long, nCells: Int): Long =
+    math.floorMod(scala.util.hashing.byteswap64(id), nCells.toLong)
+
+  /** The IVF seed rule: a bucket's seed is its min-id vector (mergeable,
+    * so deterministic under any partitioning). */
+  private def ivfMinId(
+      a: (Long, Array[Float]), b: (Long, Array[Float])): (Long, Array[Float]) =
+    if (a._1 <= b._1) a else b
+
+  /** The Lloyd step's assignment: the cell of the first seed (in cell
+    * order) with the largest dot. */
+  private def nearestSeed(
+      e: Array[Float], seeds: Array[(Long, Array[Float])]): Long = {
+    var best = 0
+    var bs = Double.MinValue
+    var i = 0
+    while (i < seeds.length) {
+      val sim = dot(e, seeds(i)._2)
+      if (sim > bs) { bs = sim; best = i }
+      i += 1
+    }
+    seeds(best)._1
+  }
+
+  /** One vector as a Lloyd-sum partial on the 1e-6 integer grid:
+    * (count 1, v·1e6 truncated to a long per dimension). Long sums are exact in any merge
+    * order, so shuffle-fetch order cannot perturb the low bits
+    * (seq_markov_perplexity's determinism trick). Vectors share one
+    * dimension. */
+  private def gridOf(e: Array[Float]): (Long, Array[Long]) = {
+    val g = new Array[Long](e.length)
+    var i = 0
+    while (i < e.length) { g(i) = (e(i).toDouble * 1e6).toLong; i += 1 }
+    (1L, g)
+  }
+
+  private def gridAdd(
+      a: (Long, Array[Long]), b: (Long, Array[Long])): (Long, Array[Long]) = {
+    val g = a._2.clone()
+    var i = 0
+    while (i < g.length) { g(i) += b._2(i); i += 1 }
+    (a._1 + b._1, g)
+  }
+
+  /** The cell mean of a grid partial, cast to float. */
+  private def gridMean(acc: (Long, Array[Long])): Array[Float] =
+    acc._2.map(x => (x.toDouble / (1e6 * acc._1)).toFloat)
+
+  /** Cell means in cell order, L2-normalized so dot-ranking is cosine
+    * against the cell DIRECTION — unnormalized means would let cell-norm
+    * skew decide assignments. A zero mean has no direction and is
+    * dropped. */
+  private def ivfNormalize(
+      means: Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
     means.sortBy(_._1).flatMap { case (cid, c) =>
       var n2 = 0.0
       var i = 0
@@ -714,6 +725,75 @@ object LlmPipeline {
         Some((cid, u))
       }
     }
+
+  /** Cell ids by (dot desc, cid asc): the head is a vector's home cell,
+    * the first nProbe are the cells a query probes. */
+  private def rankCells(
+      e: Array[Float], cents: Array[(Long, Array[Float])]): Array[Long] =
+    cents.map { case (cid, c) => (cid, dot(e, c)) }
+      .sortBy { case (cid, sim) => (-sim, cid) }
+      .map(_._1)
+
+  /** Executor-side IVF coarse-quantizer build, the distributed tier of
+    * the index (at 100 TB the training vectors never visit the driver
+    * beyond the gate + 1 rows of the tier check, [[ivfDriverVecs]]; only
+    * the √n-row centroid table — the index METADATA — is collected for
+    * broadcast):
+    *  1. SEEDS: [[ivfMinId]] per [[ivfSeedBucket]], one mergeable
+    *     reduceGroups shuffle;
+    *  2. one LLOYD STEP: every vector assigns to its [[nearestSeed]]
+    *     map-side (seeds broadcast), then per-cell [[gridOf]] partials
+    *     merge in one partially-aggregated shuffle ([[gridAdd]]) and
+    *     become [[gridMean]]s;
+    *  3. [[ivfNormalize]] on the driver (√n rows).
+    * [[ivfCentroidsLocal]] is the driver tier over the same kernels, so
+    * both tiers give the same centroids bit for bit; [[knnIvf]] and
+    * [[writeKnnIvfIndex]] take it at or below [[IvfDriverRows]] vectors,
+    * where the driver's n^1.5 probe still beats this tier's ~20-job floor
+    * (the measured table is on the gate). The typed grid merge gives
+    * the same centroids bit for bit as a posexplode per-dimension
+    * aggregate and ran ~10% faster in one JVM on 4 cores (alternating
+    * medians, 2k/8k/16k/32k vectors: 371/328/358/480 ms against
+    * 405/402/391/522 ms). Production swaps step 2 for a
+    * few sampled-k-means rounds; the broadcast/assign shape is
+    * identical. */
+  private def ivfCentroids(
+      v: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+      nCells: Int): Array[(Long, Array[Float])] = {
+    val s = v.sparkSession
+    import s.implicits._
+    val seeds = v
+      .groupByKey { case (id, _) => ivfSeedBucket(id, nCells) }
+      .reduceGroups((a, b) => ivfMinId(a, b))
+      .map { case (cell, (_, e)) => (cell, e) }
+      .collect().sortBy(_._1)
+    val bcSeeds = graft.Broadcasts.track(s.sparkContext.broadcast(seeds))
+    val means = v
+      .map { case (_, e) => (nearestSeed(e, bcSeeds.value), gridOf(e)) }
+      .groupByKey(_._1)
+      .mapValues(_._2)
+      .reduceGroups((a, b) => gridAdd(a, b))
+      .map { case (cell, acc) => (cell, gridMean(acc)) }
+      .collect()
+    ivfNormalize(means)
+  }
+
+  /** [[ivfCentroids]] on the driver over collected vectors: the same
+    * seed rule, Lloyd step, grid mean and normalization, no jobs. */
+  private def ivfCentroidsLocal(
+      vs: Array[(Long, Array[Float])], nCells: Int)
+      : Array[(Long, Array[Float])] = {
+    val seeds = vs.groupBy { case (id, _) => ivfSeedBucket(id, nCells) }
+      .iterator.map { case (cell, g) => (cell, g.reduce(ivfMinId)._2) }
+      .toArray.sortBy(_._1)
+    val sums = scala.collection.mutable.LongMap.empty[(Long, Array[Long])]
+    vs.foreach { case (_, e) =>
+      val cell = nearestSeed(e, seeds)
+      val g = gridOf(e)
+      sums.update(cell, sums.get(cell).fold(g)(gridAdd(_, g)))
+    }
+    ivfNormalize(sums.iterator.map { case (cell, acc) => (cell, gridMean(acc)) }
+      .toArray)
   }
 
   /** Quantized-rescore ANN — the production int8 two-stage retrieval
@@ -1010,17 +1090,15 @@ object LlmPipeline {
     // two passes, and the tag pass (the knnIvfPq scan-count fix)
     val v = vecs(s, d).localCheckpoint()
     val nVec = v.count()
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+    val nCells = ivfNCells(nVec)
     val cents: Array[(Long, Array[Float])] = ivfCentroids(v, nCells)
     val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
     val tagged = v
       .repartition(s.sparkContext.defaultParallelism)
       .flatMap { case (id, emb) =>
-        val cs = bc.value
-        val byDist = cs.map { case (cid, c) => (cid, dot(emb, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-        (byDist.head._1, false, id, emb) +:
-          byDist.take(nProbe).map { case (cid, _) => (cid, true, id, emb) }.toSeq
+        val cells = rankCells(emb, bc.value)
+        (cells.head, false, id, emb) +:
+          cells.take(nProbe).map(cid => (cid, true, id, emb)).toSeq
       }
     val local = tagged
       .groupByKey(_._1)
@@ -1200,7 +1278,7 @@ object LlmPipeline {
     // passed through, not recounted), and the member/probe tag passes
     val v = vecs(s, d).localCheckpoint()
     val nVec = v.count()
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+    val nCells = ivfNCells(nVec)
     val cents = ivfCentroids(v, nCells)
     val bcCents = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
     val codebook = pqCodebook(v, nVec, m, 16)
@@ -1230,11 +1308,8 @@ object LlmPipeline {
     val probes = v
       .repartition(s.sparkContext.defaultParallelism)
       .flatMap { case (id, emb) =>
-        bcCents.value.map { case (cid, c) => (cid, dot(emb, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-          .take(nProbe)
-          .map { case (cid, _) => (cid, true, id, Array.empty[Byte], emb) }
-          .toSeq
+        rankCells(emb, bcCents.value).take(nProbe)
+          .map(cid => (cid, true, id, Array.empty[Byte], emb)).toSeq
       }
     val pairs = members.union(probes)
       .groupByKey(_._1)
@@ -1286,13 +1361,19 @@ object LlmPipeline {
     import s.implicits._
     local
       .groupByKey(_._1)
-      .flatMapGroups { (aid, it) =>
-        val top = new Top3
-        it.toArray.distinct.foreach { case (_, bid, sc) => top.offer(sc, bid) }
-        top.ranked(aid).iterator
-      }
+      .flatMapGroups((aid, it) => mergeRanked(aid, it.toArray).iterator)
       .toDF("vec_id", "rn", "b_id", "score")
       .orderBy(col("vec_id"), col("rn"))
+  }
+
+  /** One query's global top-3 from its bucket/cell-local winners: the
+    * same pair seen twice has the same rounded score, so exact duplicates
+    * drop before the [[Top3]] fold. */
+  private def mergeRanked(aid: Long, local: Array[(Long, Long, Double)])
+      : IndexedSeq[(Long, Int, Long, Double)] = {
+    val top = new Top3
+    local.distinct.foreach { case (_, bid, sc) => top.offer(sc, bid) }
+    top.ranked(aid)
   }
 
   /** Embeddings as (id, primitive array) with the query side spread over
@@ -1912,51 +1993,111 @@ object LlmPipeline {
       .orderBy(col("vec_id"), col("rn"))
   }
 
-  /** IVF (inverted-file) ANN — the second scale path beside sign-LSH.
-    * A coarse quantizer of ~√n centroids (deterministic: the lowest
-    * vec_id vectors, broadcast) partitions the collection into cells;
-    * each vector is INDEXED in its nearest cell and each query PROBES its
-    * 3 nearest cells. Scoring happens inside a cell (flatMapGroups), so
-    * pair work drops from n² to nProbe·Σ cell², and the candidate merge is
-    * the same one-shuffle array-sort top-k as the LSH path. At 100 TB the
-    * centroids come from a sampled k-means fit and cells map to partition
-    * files — probes read only nProbe/nCells of the data. Oracle-exempt;
-    * ScalaTest pins recall vs brute force. */
-  def knnIvf(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val nProbe = 3
-    // Cell count ∝ √n keeps occupancy (and per-query scoring) at O(√n) —
-    // the classical IVF sizing; a fixed cell count degrades to quadratic
-    // as the collection grows (measured 18× at a 10× replication before
-    // this). Centroids: executor-built (seed + one Lloyd step,
-    // ivfCentroids) — only the √n-row index metadata reaches the driver.
-    val v = vecs(s, d).localCheckpoint()
-    val nVec = v.count()
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
-    val cents: Array[(Long, Array[Float])] = ivfCentroids(v, nCells)
-    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
-    // tag: home rows (indexed members) vs probe rows (queries)
-    val tagged = v
-      .repartition(s.sparkContext.defaultParallelism)
-      .flatMap { case (id, emb) =>
-        val cs = bc.value
-        val byDist = cs.map { case (cid, c) => (cid, dot(emb, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-        (byDist.head._1, false, id, emb) +:
-          byDist.take(nProbe).map { case (cid, _) => (cid, true, id, emb) }.toSeq
-      }
-    ivfScore(tagged)
+  /** Row gate of the IVF driver tier ([[knnIvf]], [[writeKnnIvfIndex]],
+    * [[probeKnnIvfIndex]]): at or below it the vectors come to the driver
+    * through [[ivfDriverVecs]] and the index is built and probed there
+    * with no further jobs; past it both halves run distributed.
+    *
+    * It sits far below Gated's 1M rows because the driver work grows as
+    * n^1.5: at nProbe 3 and d 64 the probe is ≈ 543·n^1.5 multiply-adds
+    * on one thread (≈ 5e11 at 1M), while the distributed tier's cost
+    * grows slowly from a floor of ~20 jobs. Measured on 4 cores (median
+    * of 5 warm runs, ms, written to the noop sink; 2k = sf0.1, 4k/8k =
+    * 8×/16× sf0.01 replicas, 16k/32k = 8×/16× sf0.1 replicas):
+    * {{{
+    *   vectors   knn_index_restart      knn_ivf
+    *             driver  distributed    driver  distributed
+    *     2k        766     1348           217     704
+    *     4k       1207     1689           513     967
+    *     8k       1496     1744          1095     996
+    *    16k       4114     2292          2478    1586
+    *    32k       9655     3577          5962    2593
+    * }}}
+    * knn_ivf crosses over between 4k and 8k, knn_index_restart between
+    * 8k and 16k; the gate is the largest power of two at or below both. */
+  private val IvfDriverRows = 4096
+
+  /** Cells each IVF query probes. */
+  private val IvfProbes = 3
+
+  /** The IVF tier choice: the vectors when there are at most `gate` of
+    * them, else `None` (the distributed tier). `limit(gate + 1)` ends the
+    * scan once gate + 1 rows are found, so past the gate the driver
+    * receives about gate + 1 rows (one job when the first partition holds
+    * them), not gate + 1 per partition as [[graft.Gated.collect]] would
+    * send; at or under it the array is the whole table, in scan order. */
+  private[graft] def ivfDriverVecs(
+      v: org.apache.spark.sql.Dataset[(Long, Array[Float])], gate: Int)
+      : Option[Array[(Long, Array[Float])]] = {
+    val vs = v.limit(gate + 1).collect()
+    if (vs.length > gate) None else Some(vs)
   }
 
-  /** Cell-local IVF scoring over tagged (cell, isProbe, id, emb) rows —
-    * bounded top-3 insertion per query, no per-query candidate array or
-    * sort (the allocation churn dominated at 30× replication: 124M boxed
-    * tuples for 60k vectors), then the same one-shuffle typed merge as
-    * the LSH path (probe cells overlap ⇒ dedup, global top-3 per
-    * query). Shared verbatim by [[knnIvf]] (in-session index) and
-    * [[knnIndexRestart]] (index reloaded from parquet) — Top3's total
-    * (score desc, id asc) order makes the result independent of member
-    * arrival order, which is what makes restart parity exact. */
+  /** IVF (inverted-file) ANN — the second scale path beside sign-LSH.
+    * A coarse quantizer of ~√n centroids ([[ivfCentroids]]) partitions
+    * the collection into cells; each vector is INDEXED in its nearest
+    * cell and each query PROBES its 3 nearest cells. Scoring happens
+    * inside a cell, so pair work drops from n² to nProbe·Σ cell², and the
+    * candidate merge is the LSH path's top-3 rule. Two tiers
+    * ([[IvfDriverRows]]): a small collection is indexed and searched on
+    * the driver ([[ivfCentroidsLocal]], [[ivfSearchLocal]]); past the
+    * gate the cells are a shuffle (flatMapGroups) and the merge one more.
+    * At 100 TB the centroids come from a sampled k-means fit and cells
+    * map to partition files — probes read only nProbe/nCells of the
+    * data. Oracle-exempt; ScalaTest pins recall vs brute force and the
+    * two tiers' row-for-row equality. */
+  def knnIvf(s: SparkSession, d: String): DataFrame =
+    knnIvfAt(s, d, IvfDriverRows)
+
+  /** [[knnIvf]] with an explicit driver-tier gate — the test seam. */
+  private[graft] def knnIvfAt(s: SparkSession, d: String, gate: Int)
+      : DataFrame = {
+    import s.implicits._
+    ivfDriverVecs(vecs(s, d), gate) match {
+      case Some(vs) =>
+        val cents = ivfCentroidsLocal(vs, ivfNCells(vs.length))
+        ivfSearchLocal(s, vs, cents,
+          vs.groupBy { case (_, e) => rankCells(e, cents).head })
+      case None =>
+        val v = vecs(s, d).localCheckpoint()
+        val cents = ivfCentroids(v, ivfNCells(v.count()))
+        val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
+        // tag: home rows (indexed members) vs probe rows (queries)
+        val tagged = v
+          .repartition(s.sparkContext.defaultParallelism)
+          .flatMap { case (id, emb) =>
+            val cells = rankCells(emb, bc.value)
+            (cells.head, false, id, emb) +:
+              cells.take(IvfProbes).map(cid => (cid, true, id, emb)).toSeq
+          }
+        ivfScore(tagged)
+    }
+  }
+
+  /** One query's top-3 among one cell's members, itself excluded — the
+    * cell-local scoring step of both IVF tiers. */
+  private def cellTop3(
+      aid: Long, aemb: Array[Float], members: Array[(Long, Array[Float])])
+      : IndexedSeq[(Long, Long, Double)] = {
+    val top = new Top3
+    var bi = 0
+    while (bi < members.length) {
+      val (bid, bemb) = members(bi)
+      if (bid != aid) top.offer(r4(dot(aemb, bemb)), bid)
+      bi += 1
+    }
+    top.triples(aid)
+  }
+
+  /** Distributed IVF scoring over tagged (cell, isProbe, id, emb) rows:
+    * [[cellTop3]] per probe row inside its cell group (bounded insertion,
+    * no per-query candidate array or sort — the allocation churn
+    * dominated at 30× replication: 124M boxed tuples for 60k vectors),
+    * then the one-shuffle [[mergeTop3]] (probe cells overlap ⇒ dedup,
+    * global top-3 per query). Shared by [[knnIvf]] and
+    * [[probeKnnIvfIndex]] — Top3's total (score desc, id asc) order makes
+    * the result independent of member arrival order, which is what makes
+    * restart parity exact. */
   private def ivfScore(
       tagged: org.apache.spark.sql.Dataset[(Long, Boolean, Long, Array[Float])])
       : DataFrame = {
@@ -1967,89 +2108,144 @@ object LlmPipeline {
       .flatMapGroups { (_, it) =>
         val rows = it.toArray
         val members = rows.filter(!_._2).map(r => (r._3, r._4))
-        val n = members.length
-        rows.iterator.filter(_._2).flatMap { case (_, _, aid, aemb) =>
-          val top = new Top3
-          var bi = 0
-          while (bi < n) {
-            val (bid, bemb) = members(bi)
-            if (bid != aid) top.offer(r4(dot(aemb, bemb)), bid)
-            bi += 1
-          }
-          top.triples(aid)
-        }
+        rows.iterator.filter(_._2)
+          .flatMap { case (_, _, aid, aemb) => cellTop3(aid, aemb, members) }
       }
     mergeTop3(local)
+  }
+
+  /** The driver tier of IVF search: every query's [[IvfProbes]] nearest
+    * cells scored with [[cellTop3]] and merged with [[mergeRanked]] — the
+    * distributed tier's kernels, so the rows are equal — returned as a
+    * local frame already in (vec_id, rn) order. */
+  private def ivfSearchLocal(
+      s: SparkSession,
+      queries: Array[(Long, Array[Float])],
+      cents: Array[(Long, Array[Float])],
+      members: Map[Long, Array[(Long, Array[Float])]]): DataFrame = {
+    import s.implicits._
+    val rows = queries.groupBy(_._1).toArray.sortBy(_._1).flatMap {
+      case (aid, qs) =>
+        mergeRanked(aid, qs.flatMap { case (_, e) =>
+          rankCells(e, cents).take(IvfProbes).flatMap { cid =>
+            members.get(cid).fold(IndexedSeq.empty[(Long, Long, Double)])(
+              cellTop3(aid, e, _))
+          }
+        })
+    }
+    s.createDataset(rows.toSeq).toDF("vec_id", "rn", "b_id", "score")
   }
 
   /** Persist the IVF index to parquet: the centroid table (√n rows — the
     * index METADATA) and the home-cell assignment (cid, vec_id — ids
     * only, bucketed on cid at scale). A production vector store builds
     * this once per collection snapshot; any later session probes it
-    * ([[probeKnnIvfIndex]]) without re-running seeding or Lloyd. */
+    * ([[probeKnnIvfIndex]]) without re-running seeding or Lloyd.
+    *
+    * Two tiers ([[IvfDriverRows]]): at or below the gate the vectors come
+    * from [[ivfDriverVecs]], [[ivfCentroidsLocal]] and the home
+    * cells run on the driver, and each table is written as one file
+    * (3 jobs in all); past it [[ivfCentroids]] and the assignment run on
+    * executors. Both tiers write the same rows. */
   private[graft] def writeKnnIvfIndex(
-      s: SparkSession, d: String, dir: String): Unit = {
+      s: SparkSession, d: String, dir: String, gate: Int = IvfDriverRows)
+      : Unit = {
     import s.implicits._
-    val v = vecs(s, d).localCheckpoint()
-    val nVec = v.count()
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
-    val cents = ivfCentroids(v, nCells)
-    s.createDataset(cents.toIndexedSeq).toDF("cid", "centroid")
+    val (cents, cells) = ivfDriverVecs(vecs(s, d), gate) match {
+      case Some(vs) =>
+        val cents = ivfCentroidsLocal(vs, ivfNCells(vs.length))
+        (cents, s.createDataset(
+          vs.toSeq.map { case (id, e) => (rankCells(e, cents).head, id) })
+          .coalesce(1))
+      case None =>
+        val v = vecs(s, d).localCheckpoint()
+        val cents = ivfCentroids(v, ivfNCells(v.count()))
+        val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
+        (cents, v.map { case (id, e) => (rankCells(e, bc.value).head, id) })
+    }
+    s.createDataset(cents.toIndexedSeq).toDF("cid", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/ivf_centroids.parquet")
-    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
-    v
-      .map { case (id, emb) =>
-        val home = bc.value.map { case (cid, c) => (cid, dot(emb, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }.head._1
-        (home, id)
-      }
-      .toDF("cid", "vec_id")
+    cells.toDF("cid", "vec_id")
       .write.mode("overwrite").parquet(s"$dir/ivf_cells.parquet")
   }
 
-  /** Probe half of the restart path: reload the centroid metadata (√n
-    * rows to the driver — the same declared metadata collect the
-    * in-session builder performs when it broadcasts centroids), assign
-    * every query its nProbe nearest cells map-side, re-attach member
-    * embeddings by id join against the vector table, and run the SAME
-    * [[ivfScore]] kernel. */
+  /** Probe half of the restart path. Both files reload with their
+    * declared schemas (no schema-inference job), and the centroid
+    * metadata (√n rows) comes to the driver — the same declared metadata
+    * collect the in-session builder performs when it broadcasts
+    * centroids. Two tiers ([[IvfDriverRows]]): at or below the gate the
+    * vectors come to the driver through [[ivfDriverVecs]], then the cell
+    * assignment (one (cid, vec_id) row per vector of the index written
+    * from the same table), and [[ivfSearchLocal]] returns a local frame;
+    * past it every query is assigned its nProbe nearest cells
+    * map-side, member embeddings re-attach by id join against the vector
+    * table, and the SAME [[ivfScore]] kernel runs. */
   private[graft] def probeKnnIvfIndex(
-      s: SparkSession, d: String, dir: String): DataFrame = {
+      s: SparkSession, d: String, dir: String, gate: Int = IvfDriverRows)
+      : DataFrame = {
     import s.implicits._
-    val nProbe = 3
-    val cents = s.read.parquet(s"$dir/ivf_centroids.parquet")
+    val cents = s.read.schema("cid BIGINT, centroid ARRAY<FLOAT>")
+      .parquet(s"$dir/ivf_centroids.parquet")
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
-    val members = s.read.parquet(s"$dir/ivf_cells.parquet")
-      .join(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "vec_id")
-      .select(col("cid"), lit(false).as("probe"), col("vec_id"),
-        col("embedding"))
-      .as[(Long, Boolean, Long, Array[Float])]
-    val probes = vecs(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
-      .flatMap { case (id, emb) =>
-        bc.value.map { case (cid, c) => (cid, dot(emb, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-          .take(nProbe).map { case (cid, _) => (cid, true, id, emb) }.toSeq
-      }
-    ivfScore(members.union(probes))
+    val cells = s.read.schema("cid BIGINT, vec_id BIGINT")
+      .parquet(s"$dir/ivf_cells.parquet")
+    val local = ivfDriverVecs(vecs(s, d), gate).map { vs =>
+      val byId = vs.groupBy(_._1)
+      val home = cells.as[(Long, Long)].collect()
+      ivfSearchLocal(s, vs, cents, home.groupBy(_._1).map { case (cid, ids) =>
+        cid -> ids.flatMap { case (_, id) => byId.getOrElse(id, Array.empty) }
+      })
+    }
+    local.getOrElse {
+      val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
+      val members = cells
+        .join(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
+          "vec_id")
+        .select(col("cid"), lit(false).as("probe"), col("vec_id"),
+          col("embedding"))
+        .as[(Long, Boolean, Long, Array[Float])]
+      val probes = vecs(s, d)
+        .repartition(s.sparkContext.defaultParallelism)
+        .flatMap { case (id, emb) =>
+          rankCells(emb, bc.value).take(IvfProbes)
+            .map(cid => (cid, true, id, emb)).toSeq
+        }
+      ivfScore(members.union(probes))
+    }
   }
 
   /** ANN-index RESTART — [[dedupIndexRestart]]'s twin for the SEARCH
     * side: the IVF index (centroids + cell assignment) writes to parquet
-    * once and every query is answered from the RELOADED files in
-    * whatever session asks — seeding/Lloyd never rerun per query batch.
+    * and every query is answered from the RELOADED files in whatever
+    * session asks — seeding/Lloyd never rerun per query batch. Every
+    * call writes and reloads its own index; nothing is cached across
+    * calls.
+    *
+    * Tiers: at or below [[IvfDriverRows]] vectors both halves run on the
+    * driver (one collect of the vectors to build, writes of one file per
+    * table, two schema-declared reloads and a collect of the vectors to
+    * probe: 6 jobs, 7 with the job that writes the result, against 19
+    * for the distributed tier at 2k vectors),
+    * and the result is a local frame, so the index directory is deleted
+    * before the call returns. Past the gate both halves are distributed,
+    * the result reads the directory lazily, and it is deleted at JVM exit
+    * ([[graft.TempDirs]]).
+    *
     * Output ≡ [[knnIvf]] (same centroids, same probe rule, same scoring
-    * kernel; Round11Spec pins the equality from a fresh session).
+    * kernels; Round11Spec pins the equality from a fresh session).
     * Oracle-exempt (IVF recall is probabilistic — knn_cosine is the
     * family's exact oracle anchor). */
-  def knnIndexRestart(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx")
-      .toString
-    writeKnnIvfIndex(s, d, dir)
-    probeKnnIvfIndex(s, d, dir)
-  }
+  def knnIndexRestart(s: SparkSession, d: String): DataFrame =
+    knnIndexRestartAt(s, d, IvfDriverRows)
+
+  /** [[knnIndexRestart]] with an explicit driver-tier gate — the test
+    * seam. */
+  private[graft] def knnIndexRestartAt(s: SparkSession, d: String, gate: Int)
+      : DataFrame =
+    graft.TempDirs.withDir("graft-ivf-idx") { dir =>
+      writeKnnIvfIndex(s, d, dir, gate)
+      probeKnnIvfIndex(s, d, dir, gate)
+    }
 
   // -------------------------------------------------------- near-dup text
 
@@ -2321,12 +2517,11 @@ object LlmPipeline {
     * (murmur3 banding in stage 3); Round11Spec pins fresh-session
     * restart ≡ [[pipelineIncrementalCurate]], and the gate runs it at
     * 16×. */
-  def pipelineCurateRestart(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-curate-idx")
-      .toString
-    writeDedupIndexes(s, d, dir)
-    probeCurateAssets(s, d, dir)
-  }
+  def pipelineCurateRestart(s: SparkSession, d: String): DataFrame =
+    graft.TempDirs.withDir("graft-curate-idx") { dir =>
+      writeDedupIndexes(s, d, dir)
+      probeCurateAssets(s, d, dir)
+    }
 
   private[graft] def probeCurateAssets(
       s: SparkSession, d: String, dir: String): DataFrame =
@@ -2349,22 +2544,21 @@ object LlmPipeline {
     * (murmur3 banding / hyperplane LSH); Round11Spec pins each
     * modality's restart probe — from a genuinely FRESH session — equal
     * to its in-session incremental twin, and the gate runs it at 16×. */
-  def dedupIndexRestart(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-idx")
-      .toString
-    writeDedupIndexes(s, d, dir)
-    val mh = probeMinhashIndex(s, d, dir)
-      .select(lit("minhash").as("modality"), col("doc_id").as("id"),
-        col("dup_of"), col("jaccard").cast("double").as("score"))
-    val ph = probePhashIndex(s, d, dir)
-      .where(col("dup_of").isNotNull)
-      .select(lit("phash").as("modality"), col("doc_id").as("id"),
-        col("dup_of"), col("best_ham").cast("double").as("score"))
-    val em = probeEmbeddingIndex(s, d, dir)
-      .select(lit("embedding").as("modality"), col("vec_id").as("id"),
-        col("dup_of"), col("dup_score").cast("double").as("score"))
-    mh.unionAll(ph).unionAll(em).orderBy(col("modality"), col("id"))
-  }
+  def dedupIndexRestart(s: SparkSession, d: String): DataFrame =
+    graft.TempDirs.withDir("graft-dedup-idx") { dir =>
+      writeDedupIndexes(s, d, dir)
+      val mh = probeMinhashIndex(s, d, dir)
+        .select(lit("minhash").as("modality"), col("doc_id").as("id"),
+          col("dup_of"), col("jaccard").cast("double").as("score"))
+      val ph = probePhashIndex(s, d, dir)
+        .where(col("dup_of").isNotNull)
+        .select(lit("phash").as("modality"), col("doc_id").as("id"),
+          col("dup_of"), col("best_ham").cast("double").as("score"))
+      val em = probeEmbeddingIndex(s, d, dir)
+        .select(lit("embedding").as("modality"), col("vec_id").as("id"),
+          col("dup_of"), col("dup_score").cast("double").as("score"))
+      mh.unionAll(ph).unionAll(em).orderBy(col("modality"), col("id"))
+    }
 
   /** End-to-end INCREMENTAL corpus curation — the steady-state ingest
     * pipeline composed from the arrival-shaped pieces, one verdict row
@@ -5790,7 +5984,7 @@ object LlmPipeline {
       : DataFrame = {
     import s.implicits._
     val nVec = bcRef.value.length
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+    val nCells = ivfNCells(nVec)
     val cents = ivfCentroids(v, nCells)
     val bcC = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
     val directed = v.repartition(s.sparkContext.defaultParallelism)
@@ -5830,8 +6024,7 @@ object LlmPipeline {
         }
         it.flatMap { case (id, emb) =>
           // 2 best probe cells, (sim desc, cid asc)
-          val probes = cs.map { case (cid, c) => (cid, dot(emb, c)) }
-            .sortBy { case (cid, sim) => (-sim, cid) }.take(2).map(_._1)
+          val probes = rankCells(emb, cs).take(2)
           val top = new TopC(HnswM0)
           probes.foreach { cid =>
             val members = byCell.get(cid)
@@ -6051,24 +6244,19 @@ object LlmPipeline {
     import s.implicits._
     val v = vecs(s, d).localCheckpoint()
     val nVec = v.count()
-    val nCells = cellsMult *
-      math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+    val nCells = cellsMult * ivfNCells(nVec)
     val cents = ivfCentroids(v, nCells)
     val bcC = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
     val nProbe = math.min(probes, cents.length)
     val nRepl = math.min(repl, cents.length)
     val shards = v
       .flatMap { case (id, e) =>
-        bcC.value.map { case (cid, c) => (cid, dot(e, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-          .take(nRepl).map { case (cid, _) => (cid, id, e) }.toSeq
+        rankCells(e, bcC.value).take(nRepl).map(cid => (cid, id, e)).toSeq
       }
       .groupByKey(_._1)
     val routed = v
       .flatMap { case (id, e) =>
-        bcC.value.map { case (cid, c) => (cid, dot(e, c)) }
-          .sortBy { case (cid, sim) => (-sim, cid) }
-          .take(nProbe).map { case (cid, _) => (cid, id, e) }.toSeq
+        rankCells(e, bcC.value).take(nProbe).map(cid => (cid, id, e)).toSeq
       }
       .groupByKey(_._1)
     val perShard = routed.cogroup(shards) { (_, qs, rs) =>
@@ -6247,7 +6435,7 @@ object LlmPipeline {
     // measured cell-layout occupancy for the IVF rungs: same centroid
     // build + probe rule as knnIvf/knnIvfPq, counted not assumed
     val nProbe = 3
-    val nCells = math.max(8, math.ceil(math.sqrt(nVec.toDouble / 8)).toInt)
+    val nCells = ivfNCells(nVec)
     val cents = ivfCentroids(v, nCells)
     val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
     val homes = v.map { case (_, emb) =>
@@ -6263,9 +6451,7 @@ object LlmPipeline {
       best
     }.toDF("cid").groupBy(col("cid")).agg(count(lit(1)).as("members"))
     val probes = v.flatMap { case (id, emb) =>
-      bc.value.map { case (cid, c) => (cid, dot(emb, c)) }
-        .sortBy { case (cid, sim) => (-sim, cid) }
-        .take(nProbe).map { case (cid, _) => (id, cid) }.toSeq
+      rankCells(emb, bc.value).take(nProbe).map(cid => (id, cid)).toSeq
     }.toDF("qid", "cid")
     val scanned = probes.join(homes, "cid")
       .groupBy(col("qid")).agg(sum(col("members")).as("m"))

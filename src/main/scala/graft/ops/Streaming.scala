@@ -144,12 +144,22 @@ object Streaming {
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
-  /** Dedup on event_id — batch twin of dropDuplicatesWithinWatermark.
+  /** Dedup on event_id. A stream (which must carry a watermark) uses
+    * `dropDuplicatesWithinWatermark`, so an id's state is evicted once the
+    * watermark passes its event time plus the delay and the state stays
+    * bounded; a batch frame uses `dropDuplicates`, its twin, because
+    * Spark 4.1 rejects `dropDuplicatesWithinWatermark` on a batch frame
+    * ("not supported with batch DataFrames/DataSets"). The two agree
+    * on every re-delivery inside the watermark delay; a re-delivery later
+    * than the delay passes through the stream. Each branch that consumes
+    * the result plans its own dedup operator with its own state store (a
+    * query that feeds it to two transforms dedups twice).
     * Deterministic survivor: events carry unique ids in the fixture, and
     * the synthetic-duplicate parity test feeds exact duplicate ROWS, so
     * any survivor is the same row. */
   def dedupTransform(events: DataFrame): DataFrame =
-    events.dropDuplicates("event_id")
+    if (events.isStreaming) events.dropDuplicatesWithinWatermark("event_id")
+    else events.dropDuplicates("event_id")
 
   def streamDedupWatermark(s: SparkSession, d: String): DataFrame =
     dedupTransform(Tables.events(s, d))

@@ -24,8 +24,15 @@ class CollectLintSpec extends AnyFunSuite {
       "sqrt(n)-row index metadata: seeds + Lloyd-step means, built on executors",
     ("LlmPipeline.scala", "probeKnnIvfIndex") ->
       ("restart reload of the SAME sqrt(n)-row centroid metadata " +
-        "ivfCentroids built — the cell assignment (the data-sized half " +
-        "of the index) stays a parquet join, never collected"),
+        "ivfCentroids built; the cell assignment (ids only, one row per " +
+        "vector) reaches the driver only once ivfDriverVecs has found at " +
+        "most IvfDriverRows (4096) vectors, past which it stays a parquet " +
+        "join"),
+    ("LlmPipeline.scala", "ivfDriverVecs") ->
+      ("IVF driver tier: at most gate + 1 vectors (IvfDriverRows = 4096, " +
+        "~1 MB of 64-d floats; the n^1.5 probe sets the bound), a " +
+        "limit, not a per-partition take; past it the index builds and " +
+        "probes on executors"),
     ("LlmPipeline.scala", "knnQuantized") ->
       "4x-smaller int8 grid quantized on executors; fp32 rescore is a join",
     ("LlmPipeline.scala", "knnBinaryHamming") ->
