@@ -37,18 +37,6 @@ object Explain {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    // The listener bus is async: drain it before resetting and before
-    // reading the counters, or the warm run's tail events bleed into the
-    // timed run's job/stage counts (ADVICE r16). private[spark] is
-    // public at the bytecode level, so plain reflection reaches it.
-    def drainBus(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass
-          .getMethod("listenerBus").invoke(spark.sparkContext)
-        bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .fold(Thread.sleep(200))(_.invoke(bus))
-      } catch { case _: Throwable => Thread.sleep(200) }
     keys.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[explain] unknown key: $name")
@@ -58,7 +46,9 @@ object Explain {
           fn(spark, sfDir).count()
           Broadcasts.destroyAll(); Caches.unpersistAll()
           spark.catalog.clearCache()
-          drainBus()
+          // drain before resetting, or the warm run's tail events bleed
+          // into the timed run's job/stage counts (ADVICE r16)
+          Session.drainListenerBus(spark.sparkContext)
           jobs = 0; stages = 0; tasks = 0
           // time plan construction + execution together: several loop
           // operators run driver actions while BUILDING the frame (the
@@ -67,7 +57,7 @@ object Explain {
           val df = fn(spark, sfDir)
           df.count()
           val sec = (System.nanoTime() - t0) / 1e9
-          drainBus()
+          Session.drainListenerBus(spark.sparkContext)
           // post-execution explain shows AQE final plans where present
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

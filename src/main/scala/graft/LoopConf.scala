@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** STATIC NARROW LOOP COMPILE — the r16 recipe for the iterative
   * fixpoint operators (ALS proved it on the #1 key; this generalizes
@@ -71,4 +73,15 @@ object LoopConf {
       s.conf.set(partKey, partPrev)
     }
   }
+
+  /** Frees the blocks a `localCheckpoint` pinned under each frame, without
+    * waiting: a loop calls it on a superseded round's checkpoint once the
+    * next one has materialized, and on its loop-invariant inputs when
+    * nothing lazy reads them any more. A checkpointed frame's plan is its
+    * own LogicalRDD, so the first one found is that frame's blocks. */
+  def release(dfs: DataFrame*): Unit =
+    dfs.foreach(df => pinnedRdd(df).foreach(_.unpersist(blocking = false)))
+
+  private def pinnedRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
 }

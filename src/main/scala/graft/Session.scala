@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** The local SparkSession recipe shared by the mains and the test suite;
-  * callers add their own settings to the returned builder. */
+/** The local SparkSession recipe shared by the mains and the test suite
+  * (callers add their own settings to the returned builder), and the
+  * listener-bus drain their job counters read through. */
 object Session {
   def local(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -21,4 +23,18 @@ object Session {
       // read ~50-100 ms high. 8192 entries hold the whole surface's
       // generated classes.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+
+  /** Blocks until every event posted so far has reached the listeners.
+    * The listener bus is async, so a job or stage counter read (or reset)
+    * without this misses the tail of the work just run, or counts it in
+    * the next. `listenerBus` is private[spark], which is public in
+    * bytecode, so plain reflection reaches it; if it cannot, a 200 ms
+    * sleep stands in. */
+  private[graft] def drainListenerBus(sc: SparkContext): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethods
+        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+        .fold(Thread.sleep(200))(_.invoke(bus))
+    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(200) }
 }

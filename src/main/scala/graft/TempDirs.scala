@@ -4,14 +4,16 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
 
-/** Temporary directories of the index-restart keys (`knn_index_restart`,
-  * `dedup_index_restart`, `pipeline_curate_restart`), which write an
-  * index and answer from the reloaded files on every call.
+/** Temporary directories the engine writes: the index-restart keys'
+  * (`knn_index_restart`, `dedup_index_restart`, `pipeline_curate_restart`),
+  * which write an index and answer from the reloaded files on every call,
+  * and the multimodal keys' staged PNG corpus.
   *
-  * [[withDir]] is the one lifetime rule: a directory that the returned
-  * frame no longer reads (its rows are local) is deleted before the call
-  * returns; one that the frame still reads lazily is deleted recursively
-  * at JVM shutdown, since a later action on the frame may scan it. */
+  * [[withDir]] is the lifetime rule for a per-call directory: one that the
+  * returned frame no longer reads (its rows are local) is deleted before
+  * the call returns; one that the frame still reads lazily is deleted
+  * recursively at JVM shutdown ([[deleteAtExit]]), since a later action on
+  * the frame may scan it. */
 object TempDirs {
 
   private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
@@ -33,12 +35,19 @@ object TempDirs {
     } finally {
       if (out != null && out.inputFiles.exists(f =>
           new org.apache.hadoop.fs.Path(f).toUri.getPath
-            .startsWith(dir.toString + "/"))) {
-        hook
-        atExit.add(dir)
-      } else delete(dir)
+            .startsWith(dir.toString + "/"))) deleteAtExit(dir)
+      else delete(dir)
     }
   }
+
+  /** Deletes `dir` and everything under it when the JVM shuts down. */
+  def deleteAtExit(dir: Path): Unit = {
+    hook
+    atExit.add(dir)
+  }
+
+  /** Whether `dir` waits for [[deleteAtExit]] — the test seam. */
+  private[graft] def pendingAtExit(dir: Path): Boolean = atExit.contains(dir)
 
   /** Deletes `dir` and everything under it; a missing path is a no-op. */
   private def delete(dir: Path): Unit =

@@ -2055,10 +2055,6 @@ object Analytics {
     * synthetic graph (exact equality), plus analytic star-graph values
     * and fixture norm/determinism invariants. */
   private[graft] def hits(edges: DataFrame, rounds: Int): DataFrame = {
-    def pinnedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
     // STATIC NARROW LOOP COMPILE + keyed edge forms (r16, graft.LoopConf).
     // Under AQE, pre-partitioning the edge set measured 1.12× SLOWER
     // (AQE broadcasts the catalog-sized score side per half-round AND
@@ -2118,8 +2114,8 @@ object Analytics {
       val aN = renorm(
         eBySrc.join(hN, "src").groupBy(col("dst")).agg(sum(col("hm")).as("am")),
         "dst", "am").localCheckpoint()
-      if (lastH != null) pinnedRdd(lastH).foreach(_.unpersist(blocking = false))
-      pinnedRdd(lastA).foreach(_.unpersist(blocking = false))
+      if (lastH != null) graft.LoopConf.release(lastH)
+      graft.LoopConf.release(lastA)
       lastH = hN; lastA = aN
       h = hN; a = aN
     }
@@ -2127,8 +2123,7 @@ object Analytics {
         (col("hm").cast("double") / lit(1e6)).as("score"))
       .unionAll(a.select(lit("auth").as("kind"), col("dst").as("id"),
         (col("am").cast("double") / lit(1e6)).as("score")))
-    Seq(e, eByDst, eBySrc)
-      .foreach(df => pinnedRdd(df).foreach(_.unpersist(blocking = false)))
+    graft.LoopConf.release(e, eByDst, eBySrc)
     out
     }
   }
@@ -2151,10 +2146,6 @@ object Analytics {
   private[graft] def randomWalks(
       edges: DataFrame, seeds: DataFrame, walksPerSeed: Int,
       steps: Int): DataFrame = {
-    def pinnedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
     // static narrow compile (r16, graft.LoopConf): the adjacency window
     // exchange sizes itself off the edge count instead of paying AQE
     // stage barriers per step; the step joins stay explicit broadcasts,
@@ -2197,7 +2188,7 @@ object Analytics {
       out = out.unionAll(
         frontier.select(col("walk_id"), lit(t).as("step"), col("node")))
     }
-    pinnedRdd(adj).foreach(_.unpersist(blocking = false))
+    graft.LoopConf.release(adj)
     out
     }
   }
@@ -3556,7 +3547,7 @@ object Analytics {
     * dim-fits-in-memory adjudication that lets knn_cosine broadcast the
     * reference matrix and cache_hot_dim pin a dimension; at a part
     * catalog beyond driver memory the contraction moves to distributed
-    * label propagation ([[graft.ops.LlmPipeline.minLabelCc]]) at
+    * label propagation ([[Components.loop]]) at
     * diameter-many extra jobs per round. Component count at least
     * halves per round ⇒ ≤ log₂ n rounds, capped and throwing; the
     * chosen per-round edges are collected (≤ live components, halving —
@@ -3659,12 +3650,13 @@ object Analytics {
     * Scale: composes the forest build (its scale story — one reduced
     * job per halving round; served from the shared forest memo when
     * graph_mst_boruvka already built this corpus in-session, rebuilt
-    * fresh otherwise) + one filter + [[graft.ops.LlmPipeline
-    * .minLabelCc]] over the KEPT fragments (diameter-bounded per
-    * fragment, forest-sized input) + one label window; cluster ids are
-    * min member ids (deterministic). Oracle-exempt (iterative
-    * composition); Round14Spec pins the full-graph CC equivalence at
-    * sf0.01 and a synthetic weak-link split. */
+    * fresh otherwise) + one filter + [[Components.ofPairs]] over the
+    * KEPT forest edges, which the forest memo already holds on the
+    * driver (forest-sized, at most n−1 rows, so no gate and no loop
+    * tier) + one label window; cluster ids are min member ids
+    * (deterministic). Oracle-exempt (iterative composition); Round14Spec
+    * pins the full-graph CC equivalence at sf0.01 and a synthetic
+    * weak-link split. */
   def clusterHierarchicalCut(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // consumer of the shared forest memo: a session that already built
@@ -3672,24 +3664,12 @@ object Analytics {
     // always recomputes — the scc-label/BPE rule)
     val rows = graft.Memo.getOrCompute("mst_forest",
       graft.Memo.fingerprint(d, "lineitem.parquet"))(boruvkaForest(s, d))
-    val forest = rows.toSeq
-      .toDF("p1", "p2", "cnt", "round")
-      .select(col("p1"), col("p2"), col("cnt")).localCheckpoint()
     // universe: the forest spans every non-isolated co-order node
-    val nodes = forest.select(col("p1").as("v"))
-      .unionByName(forest.select(col("p2").as("v"))).distinct()
-    val kept = forest.where(col("cnt") >= 3)
-      .select(col("p1"), col("p2"))
-    val sym = kept.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionByName(kept.select(col("p2").as("src"), col("p1").as("dst")))
-      .localCheckpoint()
-    val labels = LlmPipeline.minLabelCc(
-      nodes.select(col("v"), col("v").as("lbl")), sym)
-    labels
+    val nodes = rows.toSeq.flatMap(r => Seq(r._1, r._2)).toDF("part")
+    val kept = rows.collect { case (p1, p2, cnt, _) if cnt >= 3 => (p1, p2) }
+    Components.ofPairs(nodes, kept)
       .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("lbl"))))
-      .select(col("v").as("part"), col("lbl").as("cluster_id"),
-        col("cluster_size"))
+        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
       .orderBy(col("part"))
   }
 

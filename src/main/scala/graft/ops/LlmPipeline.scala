@@ -3008,159 +3008,52 @@ object LlmPipeline {
     * (A≈B and B≈C must land in ONE cluster even when A≉C; the per-pair
     * verdict ops cannot express that). Every vector gets one row,
     * cluster_id = the min vec_id of its component (itself when it has no
-    * pair). Two tiers, one answer:
+    * pair). The two tiers are [[Components]]':
     *
     *  - DRIVER (the pair set fits the `sim_pairs` memo's 1M-pair gate,
     *    [[simPairArr]]): the pair array is already on the driver — built
-    *    or served — so a min-root union-find ([[ccDriver]]) labels the
-    *    components in O(pairs) with O(nodes) driver memory, and one map
-    *    over the distinct embedding ids applies the broadcast root map.
-    *    No Spark job runs while the frame is built (the loop below pays
-    *    ~19 jobs of per-round planning and scheduling for a 2000-node
-    *    graph) — the Borůvka dimension-sized union-find adjudication.
-    *  - LOOP (past the gate — the scale path, [[ccLoop]]): Pregel-style
-    *    min-label propagation ([[minLabelCc]]) over the distributed pair
-    *    build; rounds = graph diameter (near-dup graphs are dense clumps
-    *    — 2-4 rounds in practice; the driver carries one Long per round,
-    *    all per-round work is joins/groupBys). At 100 TB the same loop
-    *    runs with the alternating large-star/small-star optimization
-    *    (O(log n) rounds, Kiveris et al.'s CC-MR shape) and candidate
-    *    edges come from the LSH bucket stage instead of the broadcast
-    *    kernel.
+    *    or served — so [[Components.ofPairs]] labels it with no Spark job
+    *    while the frame is built (the loop pays ~19 jobs of per-round
+    *    planning and scheduling for a 2000-node graph).
+    *  - LOOP (past the gate): [[Components.loop]] over the distributed
+    *    pair build, which runs a second time after the memo's gated
+    *    collect came back `None`. At 100 TB candidate edges come from the
+    *    LSH bucket stage instead of the broadcast kernel.
     *
     * Oracle-gated: DuckDB computes the same components with a recursive
     * CTE; DedupClusterCcSpec pins the driver tier row-for-row against
     * the loop. */
   def dedupClusterCc(s: SparkSession, d: String): DataFrame = {
     val nodes = Tables.embeddings(s, d).select(col("vec_id"))
-    simPairArr(s, d) match {
-      case Some(rows) => ccDriver(nodes, rows)
-      case None => ccLoop(nodes, simPairsBuild(s, d))
-    }
-  }
-
-  /** [[dedupClusterCc]]'s driver tier: union-find over the driver-held
-    * pairs, then the root map of the paired (non-singleton) ids is
-    * broadcast and applied to the distinct `vec_id`s of `nodes` — an
-    * unmapped id is its own cluster. */
-  private[graft] def ccDriver(
-      nodes: DataFrame, pairs: Array[(Long, Long, Double)]): DataFrame = {
-    val s = nodes.sparkSession
-    import s.implicits._
-    val uf = new UnionFind
-    pairs.foreach(p => uf.union(p._1, p._2))
-    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(uf.rootMap))
-    nodes.select(col("vec_id")).distinct().as[Long]
-      .map(v => (v, bc.value.getOrElse(v, v)))
-      .toDF("vec_id", "cluster_id")
-      .orderBy(col("vec_id"))
-  }
-
-  /** [[dedupClusterCc]]'s loop tier: [[minLabelCc]] over the symmetrized
-    * (a_id, b_id) pairs, every `vec_id` of `nodes` starting as its own
-    * label. */
-  private[graft] def ccLoop(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val p = pairs.select(col("a_id"), col("b_id"))
-    val edges = p
-      .union(p.select(col("b_id"), col("a_id")))
-      .toDF("src", "dst")
-      .localCheckpoint()
-    val labels0 = nodes.select(col("vec_id").as("v"), col("vec_id").as("lbl"))
-    minLabelCc(labels0, edges)
-      .select(col("v").as("vec_id"), col("lbl").as("cluster_id"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** The min-label CC loop shared by [[dedupClusterCc]]'s past-gate
-    * tier ([[ccLoop]]), [[dedupMinhashCc]], cluster_dbscan and
-    * cluster_hierarchical_cut: `edgesSym` must be the SYMMETRIC
-    * checkpointed edge list (freed here once the loop converges),
-    * `labels0` the (v, lbl) start frame with lbl = v. Labels only ever
-    * DECREASE (min-propagation), so the global label sum is a fixpoint
-    * detector: unchanged sum ⇔ no node changed — one cheap aggregate
-    * per round instead of an old-vs-new join, and that aggregate's job
-    * is also what materializes the round's LAZY checkpoint
-    * (1 job/round). */
-  private[graft] def minLabelCc(
-      labels0: DataFrame, edgesSym: DataFrame): DataFrame = {
-    val s = labels0.sparkSession
-    var labels = labels0.localCheckpoint()
-    // static narrow loop compile (r16, graft.LoopConf): width from the
-    // materialized label/edge counts; min-propagation is order-free, so
-    // the narrow compile cannot change any label
-    val w = graft.LoopConf.width(math.max(labels.count(), edgesSym.count()))
-    graft.LoopConf.static(s, w) {
-    def lblSum(df: DataFrame): Long =
-      df.agg(sum(col("lbl"))).head().getLong(0)
-    var prevSum = lblSum(labels)
-    var converged = false
-    var rounds = 0
-    val maxRounds = 50
-    // A localCheckpoint pins its blocks in executor storage until GC; over
-    // many rounds the superseded checkpoints accumulate (ADVICE round-3).
-    // Each round frees the PREVIOUS round's blocks once the new checkpoint
-    // has materialized (the fixpoint sum ran, so `next` no longer
-    // depends on them).
-    def pinnedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
-    while (!converged && rounds < maxRounds) {
-      val prop = edgesSym.join(labels, edgesSym("src") === labels("v"))
-        .select(edgesSym("dst").as("v"), labels("lbl"))
-      // lazy: the fixpoint-sum aggregate materializes the round's
-      // checkpoint in its own job (1 job/round, not 2)
-      val next = labels.unionByName(prop)
-        .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint(eager = false)
-      val nextSum = lblSum(next)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      pinnedRdd(labels).foreach(_.unpersist(blocking = false))
-      labels = next
-      rounds += 1
-    }
-    pinnedRdd(edgesSym).foreach(_.unpersist(blocking = false))
-    if (!converged)
-      // silent non-convergence would return WRONG cluster labels; the cap
-      // is a diameter bound (≫ any near-dup clump), so hitting it means a
-      // bug or pathological input — fail loudly (ADVICE round-3)
-      throw new IllegalStateException(
-        s"minLabelCc: min-label propagation did not converge in " +
-          s"$maxRounds rounds — non-converged labels would be wrong")
-    labels
-    }
+    (simPairArr(s, d) match {
+      case Some(rows) => Components.ofPairs(nodes, rows.map(p => (p._1, p._2)))
+      case None => Components.loop(nodes, simPairsBuild(s, d))
+    }).orderBy(col("vec_id"))
   }
 
   /** Fuzzy-dedup CLUSTERING over the minhash candidate graph — the
     * composed Dolma/FineWeb production shape: banded-minhash LSH
     * candidates, exact-Jaccard verification at 0.8 (both stages =
     * [[dedupNearMinhash]]'s kernel, bit-identical pairs), then
-    * connected components by min-label propagation so transitive
-    * near-dup chains (A≈B≈C with A≉C) land in ONE cluster with the
-    * smallest member as survivor. Every document gets a verdict row:
+    * connected components ([[Components.of]]) so transitive near-dup
+    * chains (A≈B≈C with A≉C) land in ONE cluster with the smallest
+    * member as survivor. Every document gets a verdict row:
     * cluster_id = min doc_id of its component (itself when unique),
     * is_dup = it would be dropped keeping one doc per cluster.
     *
-    * Scale: candidates are band-key collisions (ids only), the CC loop
-    * shuffles (doc, label) pairs keyed by doc — the [[dedupClusterCc]]
-    * argument end-to-end; at 100 TB the same composition runs with the
-    * large-star/small-star rounds. Oracle-exempt (minhash band keys
-    * ride MurmurHash3); Round12Spec pins exact equality with a
-    * driver-side union-find over the identical verified pair set. */
-  def dedupMinhashCc(s: SparkSession, d: String): DataFrame = {
-    val pairs = dedupNearMinhash(s, d).select(col("a_id"), col("b_id"))
-    val edges = pairs
-      .union(pairs.select(col("b_id"), col("a_id")))
-      .toDF("src", "dst")
-      .localCheckpoint()
-    val labels0 = Tables.documents(s, d)
-      .select(col("doc_id").as("v"), col("doc_id").as("lbl"))
-    minLabelCc(labels0, edges)
-      .select(col("v").as("doc_id"), col("lbl").as("cluster_id"),
-        (col("v") =!= col("lbl")).as("is_dup"))
+    * Scale: candidates are band-key collisions (ids only). Up to 1M
+    * verified pairs the components come from the driver union-find;
+    * past that the min-label loop shuffles (doc, label) pairs keyed by
+    * doc and rebuilds the verified pairs once more (the gated collect
+    * already built them). Oracle-exempt (minhash band keys ride
+    * MurmurHash3); Round12Spec pins exact equality with a driver-side
+    * union-find over the identical verified pair set. */
+  def dedupMinhashCc(s: SparkSession, d: String): DataFrame =
+    Components.of(Tables.documents(s, d).select(col("doc_id")),
+        dedupNearMinhash(s, d).select(col("a_id"), col("b_id")))
+      .select(col("doc_id"), col("cluster_id"),
+        (col("doc_id") =!= col("cluster_id")).as("is_dup"))
       .orderBy(col("doc_id"))
-  }
 
   /** Pregel-style PageRank core: fixed-iteration power method over an
     * edge list, all per-iteration work joins/groupBys (the [[dedupClusterCc]]
@@ -3178,10 +3071,6 @@ object LlmPipeline {
       verts: DataFrame, edges: DataFrame,
       iters: Int, damping: Double): DataFrame = {
     val s = verts.sparkSession
-    def pinnedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
     val e = edges.toDF("src", "dst").localCheckpoint()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // static per-iteration inputs, both materialized BEFORE the edge
@@ -3204,7 +3093,7 @@ object LlmPipeline {
     // already-sorted inputs.
     val w = graft.LoopConf.width(math.max(n.toLong, links.count()))
     // free e only once links (lazy) has materialized via the count
-    pinnedRdd(e).foreach(_.unpersist(blocking = false))
+    graft.LoopConf.release(e)
     graft.LoopConf.static(s, w) {
       val linksK = links.repartition(w, col("src"))
         .sortWithinPartitions("src").localCheckpoint(eager = false)
@@ -3234,13 +3123,12 @@ object LlmPipeline {
                 col("dang") / lit(n))).as("pr"))
         if ((i + 1) % 3 == 0 || i == iters - 1) {
           next = next.localCheckpoint()
-          pinnedRdd(lastCp).foreach(_.unpersist(blocking = false))
+          graft.LoopConf.release(lastCp)
           lastCp = next
         }
         pr = next
       }
-      Seq(links, danglingVerts, linksK, vertsK, dangK)
-        .foreach(df => pinnedRdd(df).foreach(_.unpersist(blocking = false)))
+      graft.LoopConf.release(links, danglingVerts, linksK, vertsK, dangK)
       pr
     }
   }
@@ -3774,15 +3662,19 @@ object LlmPipeline {
     * container ships no photo data), so re-encoding them per run would
     * time corpus synthesis, not the operators' ingest+decode work; the
     * Tables-reader/tokenizer-cache adjudication applies. The fresh
-    * temp dir per fingerprint means an overwritten corpus re-stages.
-    * Staging itself parallelizes over defaultParallelism (r17 — the
-    * documents scan is one split, so the encode ran single-task). */
+    * temp dir per fingerprint means an overwritten corpus re-stages; the
+    * memo keeps its path for the JVM's life, so [[graft.TempDirs]]
+    * deletes it at exit. Staging itself parallelizes over
+    * defaultParallelism (r17 — the documents scan is one split, so the
+    * encode ran single-task). */
   private def stagePngs(s: SparkSession, d: String): String =
     graft.Memo.getOrCompute("png_stage_dir",
       graft.Memo.fingerprint(d, "documents.parquet"))(stagePngsFresh(s, d))
 
   private def stagePngsFresh(s: SparkSession, d: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-png").toString
+    val path = java.nio.file.Files.createTempDirectory("graft-png")
+    graft.TempDirs.deleteAtExit(path)
+    val dir = path.toString
     val serConf = new org.apache.spark.util.SerializableConfiguration(
       s.sparkContext.hadoopConfiguration)
     Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -4328,14 +4220,16 @@ object LlmPipeline {
     * component, measured in the parameter probe), minPts = 4 counting
     * the point itself (core ⇔ ≥ 3 ε-neighbors);
     * clusters = connected components of core-core edges
-    * ([[minLabelCc]], labels = min core id); border points (non-core
+    * ([[Components.of]], labels = min core id); border points (non-core
     * with ≥ 1 core neighbor) join the SMALLEST core cluster label —
     * DBSCAN's classic border ambiguity resolved deterministically;
     * everything else is noise (cluster_id −1).
     *
     * Scale: the pair kernel is the data-sized work (its story);
     * degree/core/border are id-keyed aggregates and semi joins on the
-    * pair list; the CC loop runs on core-core edges only. Pins: EXACT
+    * pair list. The core-core edges take the driver union-find up to 1M
+    * pairs; past that the min-label loop runs on them, building them a
+    * second time after the gated collect. Pins: EXACT
     * equality with a driver DBSCAN replay (independent dot/threshold/
     * BFS) at sf0.01, plus role-count sanity (Round13Spec). */
   def clusterDbscan(s: SparkSession, d: String): DataFrame = {
@@ -4346,16 +4240,10 @@ object LlmPipeline {
       .toDF("v", "u")
     val core = sym.groupBy(col("v")).agg(count(lit(1)).as("deg"))
       .where(col("deg") >= 3).select(col("v")).localCheckpoint()
-    // checkpoint the edge frame itself: minLabelCc unpersists the first
-    // LogicalRDD it finds in the edges plan, which must be THIS frame's
-    // blocks, not the shared core/pairs checkpoints upstream
-    val coreEdges = sym
-      .join(core, Seq("v"), "left_semi")
-      .join(core.toDF("u"), Seq("u"), "left_semi")
-      .select(col("v").as("src"), col("u").as("dst"))
-      .localCheckpoint()
-    val lbl = minLabelCc(
-      core.select(col("v"), col("v").as("lbl")), coreEdges)
+    val coreEdges = pairs
+      .join(core.toDF("a_id"), Seq("a_id"), "left_semi")
+      .join(core.toDF("b_id"), Seq("b_id"), "left_semi")
+    val lbl = Components.of(core, coreEdges).toDF("v", "lbl")
     val borders = sym
       .join(core, Seq("v"), "left_anti")
       .join(lbl.toDF("u", "lbl"), Seq("u"))

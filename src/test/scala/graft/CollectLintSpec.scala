@@ -127,6 +127,11 @@ class CollectLintSpec extends AnyFunSuite {
         "broadcast adjudication): node ids once, then per-round best " +
         "cut edges — <= live components, halving, <= 2(n-1) rows total " +
         "(forest-sized); the edge-scoring work stays distributed"),
+    ("Components.scala", "of") ->
+      ("the connected-components driver tier: the (id, id) pair list " +
+        "behind the Gated gate (1M pairs, 16 MB), labelled by a " +
+        "union-find holding one Long per node; past the gate the " +
+        "min-label loop runs on executors"),
     ("Gated.scala", "collect") ->
       ("the broadcast-tier gate itself: one job, at most Rows + 1 rows " +
         "per partition, None past Rows; each caller is declared above"))

@@ -1,28 +1,42 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.LlmPipeline
+import graft.ops.{Analytics, Components, LlmPipeline}
 
-/** dedup_cluster_cc's two tiers over the `sim_pairs` memo it reads: the
-  * driver union-find tier must give exactly the min-label loop's rows
-  * (no fixture reaches the 1M-pair gate, so the loop is called
-  * directly). The memo's producer/consumer contract is a row of
+/** The connected-components module behind the four CC keys
+  * (dedup_cluster_cc, dedup_minhash_cc, cluster_dbscan,
+  * cluster_hierarchical_cut): the driver union-find tier must give
+  * exactly the min-label loop's rows. No fixture reaches the 1M-pair
+  * gate, so the loop runs through the gate -1 seam or directly. The
+  * `sim_pairs` memo's producer/consumer contract is a row of
   * MemoContractSpec. */
 class DedupClusterCcSpec extends SparkSpec {
 
-  /** Both tiers over the same nodes and pairs; asserts equal rows and
-    * returns the driver tier's (vec_id, cluster_id). */
+  /** `Components.of` at the default gate (driver) and at gate -1 (loop),
+    * and `ofPairs`, over the same nodes and pairs: asserts equal rows and
+    * returns the driver tier's (id, cluster_id) sorted by id. */
+  private def tiersAgree(nodes: DataFrame, pairs: DataFrame, hint: String)
+      : Seq[(Long, Long)] = {
+    import spark.implicits._
+    val id = nodes.columns.head
+    def sorted(df: DataFrame) = df.orderBy(col(id))
+    val drv = sorted(Components.of(nodes, pairs))
+    assertSameRows(drv, sorted(Components.of(nodes, pairs, -1)),
+      s"$hint driver vs loop:")
+    val arr = pairs.select(pairs.columns.take(2).map(col): _*)
+      .as[(Long, Long)].collect()
+    assertSameRows(drv, sorted(Components.ofPairs(nodes, arr)),
+      s"$hint of vs ofPairs:")
+    drv.as[(Long, Long)].collect().toSeq
+  }
+
   private def bothTiers(
       ids: Seq[Long], pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     import spark.implicits._
-    val nodes = ids.toDF("vec_id")
-    val arr = pairs.map { case (a, b) => (a, b, 1.0) }.toArray
-    val drv = LlmPipeline.ccDriver(nodes, arr)
-    val loop = LlmPipeline.ccLoop(nodes, arr.toSeq.toDF("a_id", "b_id", "score"))
-    assertSameRows(drv, loop, "driver vs loop:")
-    drv.as[(Long, Long)].collect().toSeq
+    tiersAgree(ids.toDF("vec_id"), pairs.toDF("a_id", "b_id"), "")
   }
 
   test("driver tier == min-label loop over the same sim pairs at sf0.01") {
@@ -30,9 +44,11 @@ class DedupClusterCcSpec extends SparkSpec {
     val rows = LlmPipeline.simPairArr(spark, sf01)
       .getOrElse(fail("sf0.01 sim pairs exceed the 1M-pair gate"))
     assert(rows.nonEmpty, "fixture has no sim pairs — comparison is vacuous")
-    val drv = LlmPipeline.ccDriver(nodes, rows)
+    val drv = Components.ofPairs(nodes, rows.map(p => (p._1, p._2)))
+      .orderBy(col("vec_id"))
     assertSameRows(drv,
-      LlmPipeline.ccLoop(nodes, LlmPipeline.simPairs(spark, sf01)), "sf0.01:")
+      Components.loop(nodes, LlmPipeline.simPairs(spark, sf01))
+        .orderBy(col("vec_id")), "sf0.01:")
     assertSameRows(LlmPipeline.dedupClusterCc(spark, sf01), drv, "operator:")
     val got = drv.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == nodes.distinct().count())
@@ -49,6 +65,58 @@ class DedupClusterCcSpec extends SparkSpec {
       Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 7L -> 7L, 8L -> 7L))
   }
 
+  test("degenerate inputs on both tiers: no nodes, one node, self-loop, repeated pairs") {
+    assert(bothTiers(Nil, Nil) == Nil)
+    assert(bothTiers(Seq(4L), Nil) == Seq(4L -> 4L))
+    assert(bothTiers(Seq(4L), Seq(4L -> 4L)) == Seq(4L -> 4L))
+    assert(bothTiers(Seq(6L, 2L, 9L), Seq(6L -> 6L, 9L -> 6L)) ==
+      Seq(2L -> 2L, 6L -> 6L, 9L -> 6L))
+    assert(bothTiers(Seq(3L, 1L, 2L),
+      Seq(3L -> 1L, 1L -> 3L, 3L -> 1L, 2L -> 2L, 3L -> 1L)) ==
+      Seq(1L -> 1L, 2L -> 2L, 3L -> 1L))
+  }
+
+  test("loop == driver on the minhash, dbscan core-core and kept forest edges at sf0.01") {
+    def nonTrivial(got: Seq[(Long, Long)], hint: String): Unit =
+      assert(got.exists { case (v, c) => v != c },
+        s"$hint no multi-member component — comparison is vacuous")
+    nonTrivial(tiersAgree(
+      Tables.documents(spark, sf01).select(col("doc_id")),
+      LlmPipeline.dedupNearMinhash(spark, sf01).select(col("a_id"), col("b_id")),
+      "minhash:"), "minhash:")
+    // cluster_dbscan's core-core edges: both ends have >= 3 eps-neighbors
+    val eps = LlmPipeline.simPairs(spark, sf01).where(col("score") >= 0.32)
+      .select(col("a_id"), col("b_id"))
+    val core = eps.select(col("a_id").as("v"))
+      .unionAll(eps.select(col("b_id").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+      .where(col("deg") >= 3).select(col("v"))
+    nonTrivial(tiersAgree(core,
+      eps.join(core.toDF("a_id"), Seq("a_id"), "left_semi")
+        .join(core.toDF("b_id"), Seq("b_id"), "left_semi"),
+      "dbscan:"), "dbscan:")
+    // cluster_hierarchical_cut's kept forest edges over the forest nodes
+    val forest = Analytics.graphMstBoruvka(spark, sf01)
+    nonTrivial(tiersAgree(
+      forest.select(col("p1").as("part"))
+        .unionAll(forest.select(col("p2").as("part"))),
+      forest.where(col("cnt") >= 3).select(col("p1"), col("p2")),
+      "forest:"), "forest:")
+  }
+
+  test("building the CC keys at sf0.01 starts a pinned number of jobs") {
+    // warm the memos first (sim_pairs, mst_forest) so the count is the
+    // consumer's own build, independent of which specs ran before
+    val pins = Seq("dedup_minhash_cc" -> 7, "cluster_dbscan" -> 7,
+      "cluster_hierarchical_cut" -> 0, "dedup_cluster_cc" -> 0)
+    val got = pins.map { case (k, _) =>
+      val fn = SparkEntry.queries(k)
+      fn(spark, sf01)
+      k -> jobsDuring(fn(spark, sf01))
+    }
+    assert(got == pins)
+  }
+
   test("one-row embeddings table: one cluster, the vector itself") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-one").toString
     Tables.embeddings(spark, sf001).orderBy(col("vec_id")).limit(1)
@@ -57,8 +125,8 @@ class DedupClusterCcSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     val got = LlmPipeline.dedupClusterCc(spark, dir)
     assertSameRows(got,
-      LlmPipeline.ccLoop(Tables.embeddings(spark, dir).select(col("vec_id")),
-        LlmPipeline.simPairs(spark, dir)), "one row:")
+      Components.loop(Tables.embeddings(spark, dir).select(col("vec_id")),
+        LlmPipeline.simPairs(spark, dir)).orderBy(col("vec_id")), "one row:")
     assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       one.map(v => v -> v))
   }

@@ -276,6 +276,17 @@ class Round11bSpec extends SparkSpec {
     assert(n * s2 - s1 * s1 == 0L && e == 0L)
   }
 
+  test("the staged PNG directory is registered for deletion at JVM exit") {
+    graft.ops.LlmPipeline.multimodalPixelStats(spark, sf001).count()
+    val dir = Memo.stored("png_stage_dir",
+        Memo.fingerprint(sf001, "documents.parquet"))
+      .getOrElse(fail("no staged PNG directory in the memo")).toString
+    val path = java.nio.file.Paths.get(dir)
+    assert(java.nio.file.Files.isDirectory(path), dir)
+    assert(path.getFileName.toString.startsWith("graft-png"), dir)
+    assert(TempDirs.pendingAtExit(path), s"$dir is not deleted at exit")
+  }
+
   test("knn_pq: 3 exact-scored rows per query, deterministic, recall vs brute") {
     val pq = LlmPipeline.knnPq(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))

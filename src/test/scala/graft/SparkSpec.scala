@@ -42,11 +42,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sc.setJobGroup(group, "jobsDuring")
     try {
       body
-      // the listener bus is async; private[spark] is public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .get.invoke(bus)
+      Session.drainListenerBus(sc)
       n.get
     } finally {
       sc.clearJobGroup()
