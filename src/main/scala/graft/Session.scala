@@ -28,13 +28,13 @@ object Session {
     * The listener bus is async, so a job or stage counter read (or reset)
     * without this misses the tail of the work just run, or counts it in
     * the next. `listenerBus` is private[spark], which is public in
-    * bytecode, so plain reflection reaches it; if it cannot, a 200 ms
-    * sleep stands in. */
-  private[graft] def drainListenerBus(sc: SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .fold(Thread.sleep(200))(_.invoke(bus))
-    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(200) }
+    * bytecode, so plain reflection reaches it. There is no fallback: a
+    * counter read without the drain would undercount silently, so a
+    * failed reflection throws. */
+  private[graft] def drainListenerBus(sc: SparkContext): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+      .get.invoke(bus)
+  }
 }

@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   *    100 TB the same loop runs with the alternating large-star/
   *    small-star rounds (O(log n) rounds, Kiveris et al.'s CC-MR shape).
   *
-  * Past the gate [[of]] builds the pairs twice: once for the gated
-  * collect that came back `None`, once more inside the loop.
+  * [[of]] builds the pairs once: it checkpoints them lazily, the gated
+  * collect's job fills the checkpoint, and past the gate the loop reads
+  * those blocks. A caller that calls [[loop]] itself after a gated
+  * collect of its own came back `None` (dedup_cluster_cc) builds its
+  * pairs twice.
   *
   * Precondition (not checked): every pair id is a node id. The loop
   * tier would otherwise add rows for ids outside `nodes`.
@@ -45,11 +48,13 @@ object Components {
   private[graft] def of(nodes: DataFrame, pairs: DataFrame, gate: Int): DataFrame = {
     val s = nodes.sparkSession
     import s.implicits._
+    // lazy: the gated collect's one job materializes the checkpoint
     val ids = pairs.select(col(pairs.columns(0)), col(pairs.columns(1)))
-    graft.Gated.collect(ids.as[(Long, Long)], gate) match {
+      .localCheckpoint(eager = false)
+    try graft.Gated.collect(ids.as[(Long, Long)], gate) match {
       case Some(arr) => ofPairs(nodes, arr)
-      case None => loop(nodes, pairs)
-    }
+      case None => loop(nodes, ids)
+    } finally graft.LoopConf.release(ids)
   }
 
   /** The driver tier over pairs already on the driver. */

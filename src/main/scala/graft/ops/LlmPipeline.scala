@@ -2024,8 +2024,8 @@ object LlmPipeline {
     * them, else `None` (the distributed tier). `limit(gate + 1)` ends the
     * scan once gate + 1 rows are found, so past the gate the driver
     * receives about gate + 1 rows (one job when the first partition holds
-    * them), not gate + 1 per partition as [[graft.Gated.collect]] would
-    * send; at or under it the array is the whole table, in scan order. */
+    * them), where [[graft.Gated.collect]] would read every partition; at
+    * or under it the array is the whole table, in scan order. */
   private[graft] def ivfDriverVecs(
       v: org.apache.spark.sql.Dataset[(Long, Array[Float])], gate: Int)
       : Option[Array[(Long, Array[Float])]] = {
@@ -3044,9 +3044,9 @@ object LlmPipeline {
     * Scale: candidates are band-key collisions (ids only). Up to 1M
     * verified pairs the components come from the driver union-find;
     * past that the min-label loop shuffles (doc, label) pairs keyed by
-    * doc and rebuilds the verified pairs once more (the gated collect
-    * already built them). Oracle-exempt (minhash band keys ride
-    * MurmurHash3); Round12Spec pins exact equality with a driver-side
+    * doc, reading the verified pairs from the checkpoint the gated
+    * collect filled (they are built once). Oracle-exempt (minhash band
+    * keys ride MurmurHash3); Round12Spec pins exact equality with a driver-side
     * union-find over the identical verified pair set. */
   def dedupMinhashCc(s: SparkSession, d: String): DataFrame =
     Components.of(Tables.documents(s, d).select(col("doc_id")),
@@ -4228,8 +4228,8 @@ object LlmPipeline {
     * Scale: the pair kernel is the data-sized work (its story);
     * degree/core/border are id-keyed aggregates and semi joins on the
     * pair list. The core-core edges take the driver union-find up to 1M
-    * pairs; past that the min-label loop runs on them, building them a
-    * second time after the gated collect. Pins: EXACT
+    * pairs; past that the min-label loop runs on them, read from the
+    * checkpoint the gated collect filled. Pins: EXACT
     * equality with a driver DBSCAN replay (independent dot/threshold/
     * BFS) at sf0.01, plus role-count sanity (Round13Spec). */
   def clusterDbscan(s: SparkSession, d: String): DataFrame = {

@@ -134,7 +134,8 @@ class CollectLintSpec extends AnyFunSuite {
         "min-label loop runs on executors"),
     ("Gated.scala", "collect") ->
       ("the broadcast-tier gate itself: one job, at most Rows + 1 rows " +
-        "per partition, None past Rows; each caller is declared above"))
+        "reach the driver (per-partition caps meet in one task behind a " +
+        "shuffle), None past Rows; each caller is declared above"))
 
   test("collect() appears only in declared broadcast-tier / metadata functions") {
     val defRe = """\s*(?:override\s+)?(?:private(?:\[\w+\])?\s+)?def (\w+)""".r

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
@@ -102,6 +103,30 @@ class DedupClusterCcSpec extends SparkSpec {
         .unionAll(forest.select(col("p2").as("part"))),
       forest.where(col("cnt") >= 3).select(col("p1"), col("p2")),
       "forest:"), "forest:")
+  }
+
+  test("past the gate over 64 partitions: the loop tier, pairs built once, the gated collect sends one partition's pairs") {
+    import spark.implicits._
+    val gate = 100
+    // 100 stars (node i joins hub i % 100): 64 partitions of 200 pairs
+    val edges = (100L until 12900L).map(i => (i, i % 100))
+    val nodes = (0L until 12900L).toDF("v")
+    val built = spark.sparkContext.longAccumulator("cc-pairs-built")
+    val pairs = spark.sparkContext.parallelize(edges, 64)
+      .map { e => built.add(1); e }.toDF("a", "b")
+    var got: DataFrame = null
+    val bytes = resultBytesByJob { got = Components.of(nodes, pairs, gate) }
+    assert(got.queryExecution.logical.collectFirst { case r: LogicalRDD => r }
+      .isDefined, "64 × 200 pairs passed a 100-pair gate")
+    assert(built.value == edges.length,
+      s"${built.value} pairs built for ${edges.length}: the loop rebuilt them")
+    assertSameRows(got.orderBy(col("v")),
+      Components.ofPairs(nodes, edges.toArray).orderBy(col("v")), "stars:")
+    // the first job is the gated collect; one partition caps at gate + 1
+    // pairs too, so 64 partitions may send no more than it does
+    val one = resultBytesByJob(Components.of(nodes, pairs.coalesce(1), gate))
+    assert(bytes.head <= 2 * one.head,
+      s"the gated collect of 64 partitions sent ${bytes.head} bytes, of one ${one.head}")
   }
 
   test("building the CC keys at sf0.01 starts a pinned number of jobs") {

@@ -1,6 +1,7 @@
 package graft
 
-/** `Gated.collect`'s boundary, with a 100-row gate over 8 partitions. */
+/** `Gated.collect`'s boundary, with a 100-row gate over 8 partitions,
+  * and what reaches the driver past it over 64. */
 class GatedSpec extends SparkSpec {
 
   private val gate = 100
@@ -34,5 +35,16 @@ class GatedSpec extends SparkSpec {
       if (n <= gate) assert(got.map(_.sorted.toSeq) == Some(0L until n), name)
       else assert(got.isEmpty, s"$name: $n rows passed a $gate-row gate")
     }
+  }
+
+  test("past the gate, 64 full partitions send the driver no more than one does") {
+    // a per-partition cap alone would send 64 × (gate + 1) rows; the
+    // driver must receive at most gate + 1, as from a single partition
+    val many = spread(Seq.fill(64)(2 * gate): _*)
+    val one = spread(64 * 2 * gate)
+    val Seq(manyBytes) = resultBytesByJob(assert(Gated.collect(many, gate).isEmpty))
+    val Seq(oneBytes) = resultBytesByJob(assert(Gated.collect(one, gate).isEmpty))
+    assert(manyBytes <= 2 * oneBytes,
+      s"64 partitions sent $manyBytes bytes, one partition $oneBytes")
   }
 }

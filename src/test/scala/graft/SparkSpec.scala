@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,27 +30,53 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** Spark jobs started from this thread while `body` runs. */
-  def jobsDuring(body: => Unit): Int = {
-    val group = "graft-spec-jobs-during"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
+  private val group = "graft-spec-jobs-during"
+
+  private def inGroup(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)
+
+  /** Runs `body` in this spec's job group with `listener` added, and
+    * drains the listener bus before removing it. */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "jobsDuring")
     try {
       body
       Session.drainListenerBus(sc)
-      n.get
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Spark jobs started from this thread while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e)) n.incrementAndGet()
+    })(body)
+    n.get
+  }
+
+  /** Per job started from this thread while `body` runs, in start order:
+    * the serialized bytes its result tasks sent to the driver. */
+  def resultBytesByJob(body: => Unit): Seq[Long] = {
+    val jobOfStage = TrieMap.empty[Int, Int]
+    val bytes = TrieMap.empty[Int, Long]
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e)) {
+          bytes(e.jobId) = 0L
+          e.stageIds.foreach(jobOfStage(_) = e.jobId)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask")
+          for (j <- jobOfStage.get(e.stageId); m <- Option(e.taskMetrics))
+            bytes(j) += m.resultSize
+    })(body)
+    bytes.toSeq.sortBy(_._1).map(_._2)
   }
 
   override def afterAll(): Unit = {
