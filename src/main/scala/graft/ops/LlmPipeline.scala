@@ -492,10 +492,15 @@ object LlmPipeline {
 
   /** Quality scoring: length, token count, avg token length, distinct-token
     * ratio, upper/space character ratios — the standard cheap pre-filters
-    * of a training-data pipeline, all codegen'd expressions. */
+    * of a training-data pipeline, all codegen'd expressions. The sort runs
+    * on the raw columns and the scores are projected after it, so the
+    * sort's range-partition sampling job and its shuffle do not each
+    * split and scan every text again. */
   def textQualityScore(s: SparkSession, d: String): DataFrame = {
     val words = split(col("text"), " ")
     Tables.documents(s, d)
+      .select(col("doc_id"), col("n_chars"), col("text"))
+      .orderBy(col("doc_id"))
       .select(
         col("doc_id"),
         col("n_chars"),
@@ -506,7 +511,6 @@ object LlmPipeline {
         round(
           (col("n_chars") - length(regexp_replace(col("text"), " ", "")))
             .cast("double") / col("n_chars"), 4).as("space_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** Token counting two ways: whitespace tokens and a BPE-ish regex token
@@ -2163,10 +2167,15 @@ object LlmPipeline {
         val bc = graft.Broadcasts.track(s.sparkContext.broadcast(cents))
         (cents, v.map { case (id, e) => (rankCells(e, bc.value).head, id) })
     }
-    s.createDataset(cents.toIndexedSeq).toDF("cid", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/ivf_centroids.parquet")
-    cells.toDF("cid", "vec_id")
-      .write.mode("overwrite").parquet(s"$dir/ivf_cells.parquet")
+    // two independent writes, one overlapped round (writeDedupIndexes'
+    // shape); no LoopConf.static block is open while they plan, since
+    // this call opens none and blocks until both finish
+    graft.Pools.runAll("graft-ivf-write", 2, Seq(
+      () => s.createDataset(cents.toIndexedSeq).toDF("cid", "centroid")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/ivf_centroids.parquet"),
+      () => cells.toDF("cid", "vec_id")
+        .write.mode("overwrite").parquet(s"$dir/ivf_cells.parquet")))
   }
 
   /** Probe half of the restart path. Both files reload with their
@@ -2174,9 +2183,10 @@ object LlmPipeline {
     * metadata (√n rows) comes to the driver — the same declared metadata
     * collect the in-session builder performs when it broadcasts
     * centroids. Two tiers ([[IvfDriverRows]]): at or below the gate the
-    * vectors come to the driver through [[ivfDriverVecs]], then the cell
+    * vectors come to the driver through [[ivfDriverVecs]], with the cell
     * assignment (one (cid, vec_id) row per vector of the index written
-    * from the same table), and [[ivfSearchLocal]] returns a local frame;
+    * from the same table, read in the same round behind the same
+    * `limit(gate + 1)`), and [[ivfSearchLocal]] returns a local frame;
     * past it every query is assigned its nProbe nearest cells
     * map-side, member embeddings re-attach by id join against the vector
     * table, and the SAME [[ivfScore]] kernel runs. */
@@ -2184,14 +2194,23 @@ object LlmPipeline {
       s: SparkSession, d: String, dir: String, gate: Int = IvfDriverRows)
       : DataFrame = {
     import s.implicits._
-    val cents = s.read.schema("cid BIGINT, centroid ARRAY<FLOAT>")
-      .parquet(s"$dir/ivf_centroids.parquet")
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
     val cells = s.read.schema("cid BIGINT, vec_id BIGINT")
       .parquet(s"$dir/ivf_cells.parquet")
-    val local = ivfDriverVecs(vecs(s, d), gate).map { vs =>
+    // the three reads are independent jobs, so they run as one overlapped
+    // round (no LoopConf.static block is open while they plan); the cell
+    // read stops at gate + 1 rows like the vector read, and only the
+    // driver tier uses it
+    var cents: Array[(Long, Array[Float])] = null
+    var home: Array[(Long, Long)] = null
+    var driverVecs: Option[Array[(Long, Array[Float])]] = None
+    graft.Pools.runAll("graft-ivf-probe", 3, Seq(
+      () => cents = s.read.schema("cid BIGINT, centroid ARRAY<FLOAT>")
+        .parquet(s"$dir/ivf_centroids.parquet")
+        .as[(Long, Array[Float])].collect().sortBy(_._1),
+      () => home = cells.as[(Long, Long)].limit(gate + 1).collect(),
+      () => driverVecs = ivfDriverVecs(vecs(s, d), gate)))
+    val local = driverVecs.map { vs =>
       val byId = vs.groupBy(_._1)
-      val home = cells.as[(Long, Long)].collect()
       ivfSearchLocal(s, vs, cents, home.groupBy(_._1).map { case (cid, ids) =>
         cid -> ids.flatMap { case (_, id) => byId.getOrElse(id, Array.empty) }
       })
@@ -2225,7 +2244,8 @@ object LlmPipeline {
     * driver (one collect of the vectors to build, writes of one file per
     * table, two schema-declared reloads and a collect of the vectors to
     * probe: 6 jobs, 7 with the job that writes the result, against 19
-    * for the distributed tier at 2k vectors),
+    * for the distributed tier at 2k vectors; the two writes overlap, and
+    * so do the three probe reads, so the 7 run in 4 serial rounds),
     * and the result is a local frame, so the index directory is deleted
     * before the call returns. Past the gate both halves are distributed,
     * the result reads the directory lazily, and it is deleted at JVM exit
@@ -2260,18 +2280,6 @@ object LlmPipeline {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** MinHash + banded LSH near-duplicate detection, then exact Jaccard
-    * verification of candidates — the canonical web-scale text dedup:
-    *  1. per doc: 16 minhash values (min over shingles of a seeded hash),
-    *  2. 4 bands × 4 rows → band keys; groupBy band key → candidate pairs,
-    *  3. exact Jaccard on candidates only; keep pairs ≥ 0.8.
-    * All-pairs work is confined to documents sharing a band — at 100 TB
-    * the shuffle is rows×16 longs, and candidate volume tracks true
-    * duplicate density, not n². Oracle-exempt (hash-seeded); ScalaTest
-    * compares against brute-force Jaccard on sf0.001. */
-  /** Word-level 3-gram shingles, JVM-side (the Catalyst HOF variant is
-    * interpreted row-at-a-time — measured 17 s at sf0.1 for the signature
-    * stage; this tight loop is ~1 s). */
   /** The ONE whitespace tokenizer every JVM shingle/signature kernel
     * shares: split(" ", -1) KEEPS trailing empty tokens — parity with
     * Catalyst split(text, " ") (limit -1) and DuckDB string_split, and
@@ -2281,6 +2289,9 @@ object LlmPipeline {
   private[graft] def wsTokens(text: String): Array[String] =
     text.split(" ", -1)
 
+  /** Word-level 3-gram shingles, JVM-side (the Catalyst HOF variant is
+    * interpreted row-at-a-time — measured 17 s at sf0.1 for the signature
+    * stage; this tight loop is ~1 s). */
   private[graft] def shingleSet(text: String): Array[String] = {
     val words = wsTokens(text)
     if (words.length < 3) Array.empty
@@ -2294,77 +2305,227 @@ object LlmPipeline {
     }
   }
 
-  /** Banded minhash signatures of a document frame: 16 seeded murmur3
-    * minhashes over the word-3-gram shingle set, folded into 4 bands of
-    * 4 — one (doc_id, band, key) row per band, computed in a single JVM
+  /** The 4 minhash band keys of one document, band b at index b: 16
+    * seeded murmur3 minhashes over its word-3-gram shingle set, folded 4
+    * to a band. The signature kernel of both [[dedupNearMinhash]] tiers
+    * and of [[minhashBandsOf]].
+    *
+    * A document with fewer than 3 tokens has NO shingles and gets no
+    * keys: otherwise they would all share the identical all-Int.MaxValue
+    * signature and band-join into an |short|² candidate clique the
+    * verifier then discards (the same degenerate-key class as the r8
+    * sample-hash bug) — a shingle-less doc can never clear a Jaccard
+    * threshold. */
+  private[graft] def minhashBandKeys(text: String): Array[String] = {
+    val sh = shingleSet(text)
+    if (sh.isEmpty) Array.empty
+    else {
+      val mh = Array.tabulate(16) { k =>
+        var m = Int.MaxValue
+        sh.foreach { sg =>
+          val h = scala.util.hashing.MurmurHash3.stringHash(sg, k)
+          if (h < m) m = h
+        }
+        m
+      }
+      Array.tabulate(4) { b =>
+        s"${mh(b * 4)}_${mh(b * 4 + 1)}_${mh(b * 4 + 2)}_${mh(b * 4 + 3)}"
+      }
+    }
+  }
+
+  /** The candidate pairs of one (band, key) bucket: every (a, b) of its
+    * doc ids with a < b, in ascending order. The bucket kernel of both
+    * [[dedupNearMinhash]] tiers. */
+  private[graft] def bucketPairs(ids: Array[Long]): Iterator[(Long, Long)] = {
+    val sorted = ids.sorted
+    for {
+      i <- sorted.indices.iterator
+      j <- (i + 1 until sorted.length).iterator
+      if sorted(i) < sorted(j)
+    } yield (sorted(i), sorted(j))
+  }
+
+  /** Exact Jaccard of two shingle sets, rounded half up to 4 dp (0 when
+    * both are empty) — the verify kernel of both [[dedupNearMinhash]]
+    * tiers. */
+  private[graft] def shingleJaccard(
+      a: scala.collection.Set[String], b: scala.collection.Set[String])
+      : Double = {
+    val inter = a.count(b.contains)
+    val uni = a.size + b.size - inter
+    if (uni == 0) 0.0
+    else math.floor(inter.toDouble / uni * 10000 + 0.5) / 10000.0
+  }
+
+  /** Banded minhash signatures of a document frame: one (doc_id, band,
+    * key) row per band from [[minhashBandKeys]], computed in a single JVM
     * pass per doc. This is the SIGNATURE INDEX of the minhash family:
-    * [[dedupNearMinhash]] self-joins it for the full sweep and
-    * [[dedupMinhashIncremental]] persists the corpus side as the static
-    * asset arriving batches join against (at 100 TB a bucketed table
-    * keyed on (band, key)). */
+    * [[dedupNearMinhash]]'s distributed tier buckets it for the full sweep
+    * and [[dedupMinhashIncremental]] persists the corpus side as the
+    * static asset arriving batches join against (at 100 TB a bucketed
+    * table keyed on (band, key)). */
   private[graft] def minhashBandsOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val nHash = 16
     docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .repartition(s.sparkContext.defaultParallelism)
       .flatMap { case (id, text) =>
-        val sh = shingleSet(text)
-        // <3-token docs have NO shingles: without this guard they all
-        // share the identical all-Int.MaxValue signature and band-join
-        // into an |short|² candidate clique the verifier then discards
-        // (the same degenerate-key class as the r8 sample-hash bug) —
-        // a shingle-less doc can never clear a Jaccard threshold, so
-        // it simply emits no band rows
-        if (sh.isEmpty) Iterator.empty
-        else {
-          val mh = Array.tabulate(nHash) { k =>
-            var m = Int.MaxValue
-            sh.foreach { sg =>
-              val h = scala.util.hashing.MurmurHash3.stringHash(sg, k)
-              if (h < m) m = h
-            }
-            m
-          }
-          (0 until 4).iterator.map { b =>
-            (id, b,
-              s"${mh(b * 4)}_${mh(b * 4 + 1)}_${mh(b * 4 + 2)}_${mh(b * 4 + 3)}")
-          }
+        minhashBandKeys(text).iterator.zipWithIndex.map { case (key, b) =>
+          (id, b, key)
         }
       }.toDF("doc_id", "band", "key")
   }
 
-  def dedupNearMinhash(s: SparkSession, d: String): DataFrame = {
+  /** Document gate of the [[dedupNearMinhash]] driver tier: at or below
+    * it (and within [[MinhashDriverBytes]]) the documents come to the
+    * driver through [[minhashDriverDocs]] and the pairs are found there
+    * with no further jobs; past it the distributed tier runs.
+    *
+    * Measured on 4 cores (median of 5 warm runs per tier, the tiers
+    * alternating, ms, written to the noop sink; N× = N copies of the
+    * sf0.1 documents with doc_id offset per copy, so every document has
+    * N - 1 exact duplicates; `graft.MinhashTierMeasure`):
+    * {{{
+    *   copies    docs   driver  distributed
+    *     1×       5k      297       815
+    *     2×      10k      501      1007
+    *     4×      20k      726      2760
+    *     8×      40k     1872      4807
+    *    16×      80k     6258      9789
+    * }}}
+    * The driver tier wins at every size, by 2-4× up to 40k documents and
+    * by 1.6× at 80k, where the candidate pairs (quadratic in the copies)
+    * start to dominate both tiers: on 4 cores the crossover lies past
+    * 80k. Here the driver and the executors share the same 4 cores, so
+    * any cluster with more executor cores than driver cores moves the
+    * crossover down, and the gate is set by the driver's memory instead:
+    * 8192 documents × [[MinhashDriverPairsPerDoc]] is about 1M candidate
+    * pairs, the size of the [[graft.Gated]] gate through which
+    * dedup_minhash_cc's [[Components.of]] takes the verified pairs to the
+    * driver. */
+  private val MinhashDriverDocs = 8192
+
+  /** Text bytes (UTF-8) the driver tier may receive: 8 KB per document at
+    * the gate, 20× the fixtures' ~300 B mean. */
+  private val MinhashDriverBytes = 64L << 20
+
+  /** Candidate pairs per document the driver tier may hold, on average:
+    * past `gate · MinhashDriverPairsPerDoc` candidate pairs (a corpus of
+    * a few thousand exact duplicates) the pairs are built distributed. */
+  private val MinhashDriverPairsPerDoc = 128
+
+  /** The minhash tier choice: the (doc_id, text) rows when there are at
+    * most `gate` documents holding at most `maxBytes` of text in all,
+    * else `None` (the distributed tier). The first job ships only each
+    * document's byte length behind a `limit(gate + 1)`: gate + 1 ints
+    * when the first partition scanned holds them (Spark's incremental
+    * take may fetch a few times that from sparse partitions, 4 bytes
+    * each). The texts follow in a second job only when the first one
+    * read the whole table within both bounds, so the driver never
+    * receives more than `gate` documents or `maxBytes` of text. */
+  private[graft] def minhashDriverDocs(
+      docs: DataFrame, gate: Int, maxBytes: Long = MinhashDriverBytes)
+      : Option[Array[(Long, String)]] = {
+    val s = docs.sparkSession
     import s.implicits._
-    val bands = minhashBandsOf(
-      Tables.documents(s, d).select(col("doc_id"), col("text")))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-      .distinct()
-    // exact-Jaccard verification of candidates only, again JVM-side.
-    val texts = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    cand
-      .join(texts.toDF("a_id", "a_text"), "a_id")
-      .join(texts.toDF("b_id", "b_text"), "b_id")
-      .select(col("a_id"), col("b_id"), col("a_text"), col("b_text"))
-      .as[(Long, Long, String, String)]
-      .map { case (a, b, at, bt) =>
-        val sa = shingleSet(at).distinct
-        val sb = shingleSet(bt).distinct
-        val sbSet = sb.toSet
-        val inter = sa.count(sbSet.contains)
-        val uni = sa.length + sb.length - inter
-        val j =
-          if (uni == 0) 0.0
-          else math.floor(inter.toDouble / uni * 10000 + 0.5) / 10000.0
-        (a, b, j)
+    val lens = docs.select(coalesce(octet_length(col("text")), lit(0)))
+      .as[Int].limit(gate + 1).collect()
+    if (lens.length > gate || lens.map(_.toLong).sum > maxBytes) None
+    else Some(docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .limit(gate + 1).collect())
+  }
+
+  /** The driver tier of [[dedupNearMinhash]]: band keys per document,
+    * (band, key) buckets, their candidate pairs and the exact-Jaccard
+    * verification, each step the distributed tier's kernel, with the
+    * per-document and per-pair work spread over the driver's cores. The
+    * result is a local frame already in (a_id, b_id) order; `None` when
+    * the buckets hold more than `maxPairs` candidate pairs. */
+  private def minhashPairsLocal(
+      s: SparkSession, docs: Array[(Long, String)], maxPairs: Long)
+      : Option[DataFrame] = {
+    import s.implicits._
+    import scala.collection.parallel.CollectionConverters._
+    val keys = docs.par.map { case (_, text) => minhashBandKeys(text) }.seq
+    val buckets = scala.collection.mutable.HashMap
+      .empty[(Int, String), scala.collection.mutable.ArrayBuilder.ofLong]
+    docs.indices.foreach { i =>
+      keys(i).indices.foreach { b =>
+        buckets.getOrElseUpdate((b, keys(i)(b)),
+          new scala.collection.mutable.ArrayBuilder.ofLong) += docs(i)._1
       }
-      .toDF("a_id", "b_id", "jaccard")
-      .where(col("jaccard") >= 0.8)
-      .orderBy(col("a_id"), col("b_id"))
+    }
+    val shared = buckets.valuesIterator.map(_.result()).filter(_.length > 1)
+      .toArray
+    val bucketPairCount =
+      shared.map(ids => ids.length.toLong * (ids.length - 1) / 2).sum
+    if (bucketPairCount > maxPairs) None
+    else {
+      val cand = shared.iterator.flatMap(bucketPairs).toArray.distinct
+      val need = cand.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
+      val sets = docs.filter { case (id, _) => need.contains(id) }.par
+        .map { case (id, text) => id -> shingleSet(text).toSet }.seq.toMap
+      val rows = cand.par
+        .map { case (a, b) => (a, b, shingleJaccard(sets(a), sets(b))) }
+        .filter(_._3 >= 0.8).seq.toArray.sortBy { case (a, b, _) => (a, b) }
+      Some(s.createDataset(rows.toSeq).toDF("a_id", "b_id", "jaccard"))
+    }
+  }
+
+  /** MinHash + banded LSH near-duplicate detection, then exact Jaccard
+    * verification of candidates — the canonical web-scale text dedup:
+    *  1. per doc: 16 minhash values (min over shingles of a seeded hash),
+    *     4 bands × 4 rows → band keys ([[minhashBandKeys]]),
+    *  2. docs sharing a (band, key) bucket → candidate pairs a < b
+    *     ([[bucketPairs]]),
+    *  3. exact Jaccard on candidates only ([[shingleJaccard]]); keep
+    *     pairs ≥ 0.8, in (a_id, b_id) order.
+    *
+    * Two tiers, the same kernels: at or below [[MinhashDriverDocs]]
+    * documents and [[MinhashDriverBytes]] of text ([[minhashDriverDocs]],
+    * two bounded jobs) every step runs on the driver and the result is a
+    * local frame. Past either bound the band rows are grouped by
+    * (band, key) into bucket id lists (one signature stage), the pairs
+    * are verified against both texts by id join, and the result is
+    * sorted on executors. All-pairs work is confined to documents
+    * sharing a band — at 100 TB the shuffle is rows×4 band keys, and
+    * candidate volume tracks true duplicate density, not n².
+    * Oracle-exempt (hash-seeded); ScalaTest compares against brute-force
+    * Jaccard on sf0.001 and the two tiers row for row. */
+  def dedupNearMinhash(s: SparkSession, d: String): DataFrame =
+    dedupNearMinhashAt(s, d, MinhashDriverDocs)
+
+  /** [[dedupNearMinhash]] with an explicit driver-tier gate — the test
+    * seam. */
+  private[graft] def dedupNearMinhashAt(s: SparkSession, d: String, gate: Int)
+      : DataFrame = {
+    import s.implicits._
+    val texts = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    minhashDriverDocs(texts, gate)
+      .flatMap(minhashPairsLocal(s, _, gate.toLong * MinhashDriverPairsPerDoc))
+      .getOrElse {
+        val cand = minhashBandsOf(texts)
+          .groupBy(col("band"), col("key"))
+          .agg(collect_list(col("doc_id")).as("ids"))
+          .where(size(col("ids")) >= 2)
+          .select(col("ids")).as[Array[Long]]
+          .flatMap(bucketPairs)
+          .toDF("a_id", "b_id")
+          .distinct()
+        cand
+          .join(texts.toDF("a_id", "a_text"), "a_id")
+          .join(texts.toDF("b_id", "b_text"), "b_id")
+          .select(col("a_id"), col("b_id"), col("a_text"), col("b_text"))
+          .as[(Long, Long, String, String)]
+          .map { case (a, b, at, bt) =>
+            (a, b, shingleJaccard(shingleSet(at).toSet, shingleSet(bt).toSet))
+          }
+          .toDF("a_id", "b_id", "jaccard")
+          .where(col("jaccard") >= 0.8)
+          .orderBy(col("a_id"), col("b_id"))
+      }
   }
 
   /** Near-dup verdicts for a batch of NEW documents against the
@@ -3810,20 +3971,6 @@ object LlmPipeline {
 
   // -------------------------------------- decontamination + quantization
 
-  /** Train/eval decontamination: drop every train doc (doc_id ≥ 100)
-    * sharing ANY 12-token shingle with the eval slice (doc_id < 100) —
-    * the n-gram-overlap screen run before an eval set is trusted.
-    *
-    * Scale: shingles travel as 64-bit HASHES, never strings — 8 bytes per
-    * shingle regardless of token width. The eval side (small by
-    * definition: eval sets are curated) is distinct-ed and BROADCAST, so
-    * the train side stays map-side: hash → semi-join against the
-    * broadcast set → distinct doc_ids; no all-pairs comparison and no
-    * shuffle of raw text. (Hash-join vs the oracle's string-join differs
-    * only on a 64-bit collision between a train and eval shingle —
-    * ~10⁻¹³ at millions of shingles; the oracle gate would surface one.)
-    * Docs shorter than the shingle width cannot be contaminated and skip
-    * shingling entirely. */
   /** 64-bit shingle hashes of one document — the ONE hashing shared by
     * [[decontaminateNgram]]'s batch kernel and its streaming twin
     * (Round6Spec): split with limit -1 (trailing empty tokens survive,
@@ -3875,16 +4022,34 @@ object LlmPipeline {
       }.toDF("doc_id", "gh")
   }
 
+  /** Train/eval decontamination: drop every train doc (doc_id ≥ 100)
+    * sharing ANY 12-token shingle with the eval slice (doc_id < 100) —
+    * the n-gram-overlap screen run before an eval set is trusted.
+    *
+    * Scale: shingles travel as 64-bit HASHES, never strings — 8 bytes per
+    * shingle regardless of token width. The eval side (small by
+    * definition: eval sets are curated) is BROADCAST, so the train side
+    * stays map-side: hash → semi-join against the broadcast set → the
+    * flagged doc_ids, broadcast into the anti-join; no all-pairs
+    * comparison, and no shuffle of raw text or ids before the output
+    * sort. (Hash-join vs the oracle's string-join differs
+    * only on a 64-bit collision between a train and eval shingle —
+    * ~10⁻¹³ at millions of shingles; the oracle gate would surface one.)
+    * Docs shorter than the shingle width cannot be contaminated and skip
+    * shingling entirely. */
   def decontaminateNgram(s: SparkSession, d: String): DataFrame = {
     val W = 12
     val docs = Tables.documents(s, d)
+    // both joins only test existence, so neither side needs a distinct
+    // (a shuffle each): repeated keys in a broadcast build side change
+    // no semi/anti-join row
     val evalShingles = docShingleHashes(docs.where(col("doc_id") < 100), W)
-      .select(col("gh")).distinct()
+      .select(col("gh"))
     val contaminated = docShingleHashes(docs.where(col("doc_id") >= 100), W)
       .join(broadcast(evalShingles), Seq("gh"), "left_semi")
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"))
     docs.where(col("doc_id") >= 100)
-      .join(contaminated, Seq("doc_id"), "left_anti")
+      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -3928,9 +4093,9 @@ object LlmPipeline {
     val suspects = docShingleHashes(docs.where(col("doc_id") >= 100), W)
       .where(org.apache.spark.sql.GraftBridge.bloomMightContain(
         filterBytes, col("gh")))
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"))
     docs.where(col("doc_id") >= 100)
-      .join(suspects, Seq("doc_id"), "left_anti")
+      .join(broadcast(suspects), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }

@@ -318,7 +318,7 @@ class CustomSurfaceSpec extends SparkSpec {
   }
 
   test("partitioned writes prune partitions at scan (PartitionFilters)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     Tables.events(spark, sf001)
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(dir)

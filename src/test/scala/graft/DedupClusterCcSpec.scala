@@ -132,7 +132,9 @@ class DedupClusterCcSpec extends SparkSpec {
   test("building the CC keys at sf0.01 starts a pinned number of jobs") {
     // warm the memos first (sim_pairs, mst_forest) so the count is the
     // consumer's own build, independent of which specs ran before
-    val pins = Seq("dedup_minhash_cc" -> 7, "cluster_dbscan" -> 7,
+    // dedup_minhash_cc: the minhash driver tier's two collects, then the
+    // gated pair collect
+    val pins = Seq("dedup_minhash_cc" -> 3, "cluster_dbscan" -> 7,
       "cluster_hierarchical_cut" -> 0, "dedup_cluster_cc" -> 0)
     val got = pins.map { case (k, _) =>
       val fn = SparkEntry.queries(k)
@@ -143,7 +145,7 @@ class DedupClusterCcSpec extends SparkSpec {
   }
 
   test("one-row embeddings table: one cluster, the vector itself") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-one").toString
+    val dir = tempDir("graft-cc-one")
     Tables.embeddings(spark, sf001).orderBy(col("vec_id")).limit(1)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val one = Tables.embeddings(spark, dir).select(col("vec_id"))

@@ -71,7 +71,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("dedup_containment: a document quoted inside a larger one scores containment 1.0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-contain").toString
+    val dir = tempDir("graft-contain")
     val inner = (1 to 20).map(i => s"w$i").mkString(" ")
     val outer = inner + " " + (100 to 179).map(i => s"z$i").mkString(" ")
     val noise = (200 to 279).map(i => s"y$i").mkString(" ")
@@ -93,7 +93,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("pipeline_dedup_cascade: exact copies drop in stage 1, quoted docs in stage 2, rest kept") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cascade").toString
+    val dir = tempDir("graft-cascade")
     val inner = (1 to 20).map(i => s"w$i").mkString(" ")
     val outer = inner + " " + (100 to 179).map(i => s"z$i").mkString(" ")
     val noise = (200 to 279).map(i => s"y$i").mkString(" ")

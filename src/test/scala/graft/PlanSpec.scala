@@ -357,7 +357,7 @@ class PlanSpec extends SparkSpec {
       // query paths, not a synthetic frame. The price jitter de-dups the
       // replicated doubles so compressed SHUFFLE sizes — what the skew
       // detector reads — reflect genuine row volume.
-      val dir = java.nio.file.Files.createTempDirectory("graft-skewop").toString
+      val dir = tempDir("graft-skewop")
       val rep = explode(sequence(lit(1), lit(256))).as("rep")
       val li = spark.read.parquet(s"$sf001/lineitem.parquet")
       val hotOk = spark.read.parquet(s"$sf001/orders.parquet")

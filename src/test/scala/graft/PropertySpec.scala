@@ -437,7 +437,7 @@ class PropertySpec extends SparkSpec {
       }
       (1000L + j, String.valueOf(chars))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-prop").toString
+    val dir = tempDir("graft-phash-prop")
     (base ++ mutants).map { case (id, t) => (id, t, "en", "srcP", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -477,7 +477,7 @@ class PropertySpec extends SparkSpec {
   test("zipf slope recovers ~-1 on an exactly Zipfian synthetic corpus") {
     import spark.implicits._
     val words = (1 to 50).flatMap(r => Seq.fill(1000 / r)(s"w${"%02d".format(r)}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zipf-prop").toString
+    val dir = tempDir("graft-zipf-prop")
     // spread across docs so the word-count aggregate actually reduces
     words.grouped(200).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" "), "en", "srcZ", 0L) }

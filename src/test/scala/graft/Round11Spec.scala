@@ -13,7 +13,7 @@ import graft.ops.LlmPipeline
 class Round11Spec extends SparkSpec {
 
   test("dedup index restart: fresh-session parquet probes == in-session incremental") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
+    val dir = tempDir("graft-idx")
     // session A: build + persist every corpus index
     LlmPipeline.writeDedupIndexes(spark, sf001, dir)
 
@@ -59,7 +59,7 @@ class Round11Spec extends SparkSpec {
       .as[(Long, String, String, String, Long)].collect().take(20)
     val donor = base.head
     val mutated = donor._2.updated(donor._2.length / 2, '~')
-    val dir = java.nio.file.Files.createTempDirectory("graft-phpx").toString
+    val dir = tempDir("graft-phpx")
     (base.toSeq :+ ((9001L, mutated, donor._3, donor._4, donor._5)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -112,7 +112,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("knn index restart: fresh-session IVF probe == in-session knn_ivf") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     LlmPipeline.writeKnnIvfIndex(spark, sf001, dir)
     val s2 = spark.newSession()
     val live = LlmPipeline.knnIvf(spark, sf001)
@@ -124,7 +124,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("curate pipeline restart: fresh-session cascade over reloaded assets == in-session") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val dir = tempDir("graft-cur")
     LlmPipeline.writeDedupIndexes(spark, sf001, dir)
     val s2 = spark.newSession()
     val live = LlmPipeline.pipelineIncrementalCurate(spark, sf001)
@@ -148,7 +148,7 @@ class Round11Spec extends SparkSpec {
     // task 6). Each hub–leaf pair is placed in TWO orders to clear the
     // cnt >= 2 co-order edge threshold.
     val nLeaves = 2000
-    val dir = java.nio.file.Files.createTempDirectory("graft-star").toString
+    val dir = tempDir("graft-star")
     (1 to nLeaves).flatMap { k =>
       Seq(0, 1).flatMap { dup =>
         val o = (k * 2 + dup).toLong

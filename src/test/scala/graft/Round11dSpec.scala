@@ -273,7 +273,7 @@ class Round11dSpec extends SparkSpec {
     // route through the same banding by scaling bands up 1000×
     val df = one.withColumn("c_acctbal", col("c_acctbal") * 1000)
     df.createOrReplaceTempView("ignored") // (not used; direct call below)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tc").toString
+    val tmp = tempDir("graft-tc")
     df.write.mode("overwrite").parquet(s"$tmp/customer.parquet")
     val r = graft.ops.Govern.privacyTCloseness(spark, tmp).collect()
     assert(r.length == 1 && r.head.getAs[Double]("t") == 0.0 &&
@@ -361,7 +361,7 @@ class Round11dSpec extends SparkSpec {
     val words = (0 until 200).map(i => s"w$i")
     val a = words.mkString(" ")
     val b = ("zzz " + a)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val tmp = tempDir("graft-cdc")
     Seq((1L, a, "en", "s", a.length.toLong), (2L, b, "en", "s", b.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -442,7 +442,7 @@ class Round11dSpec extends SparkSpec {
       (i, v.map(_ / n))
     }
     val junk = (99L, Array.tabulate(dim)(i => if (i == 63) 1.0f else 0.0f))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-outlier").toString
+    val tmp = tempDir("graft-outlier")
     (clustered :+ junk).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val planted = graft.ops.LlmPipeline.embeddingOutlierKnn(spark, tmp).collect()
@@ -462,7 +462,7 @@ class Round11dSpec extends SparkSpec {
     // perturbed and the affected shard's digest must move
     import spark.implicits._
     val docs = graft.io.Tables.documents(spark, sf001)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    val tmp = tempDir("graft-manifest")
     docs.withColumn("text",
         when(col("doc_id") === 0L, concat(col("text"), lit(" corrupted")))
           .otherwise(col("text")))

@@ -64,7 +64,7 @@ class Round12Spec extends SparkSpec {
       }
     }
     val rows = hot ++ normal
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hotuser").toString
+    val tmp = tempDir("graft-hotuser")
     rows.toDF("event_id", "user_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     // driver replay: identical arithmetic over the identical (ts, id)

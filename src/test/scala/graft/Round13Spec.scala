@@ -28,7 +28,7 @@ class Round13Spec extends SparkSpec {
       }
     }
     val rows = hot ++ normal
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hotuser13").toString
+    val tmp = tempDir("graft-hotuser13")
     rows.toDF("event_id", "user_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     def r4(x: Double): Double = math.floor(x * 10000.0 + 0.5) / 10000.0
@@ -624,7 +624,7 @@ class Round13Spec extends SparkSpec {
     assert(got.values.exists(_._2 > 0), "no doc produced a full frame")
     // planted payloads: NUL bytes are digital silence, 'U' (0x55)
     // pairs decode to loud samples — the threshold must separate them
-    val tmp = java.nio.file.Files.createTempDirectory("graft-audio").toString
+    val tmp = tempDir("graft-audio")
     Seq((1L, 0.toChar.toString * 1024), (2L, "U" * 1024))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")

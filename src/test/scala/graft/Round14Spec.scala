@@ -28,7 +28,7 @@ class Round14Spec extends SparkSpec {
       (15L, 3L, ts(20), "click", 0.0), // u3 source D (odd, %5==0)
       (13L, 4L, ts(20), "click", 4.5), // u4 source U, no target
       (25L, 5L, ts(20), "click", 0.0)) // u5 source D, no target
-    val tmp = java.nio.file.Files.createTempDirectory("graft-merge14").toString
+    val tmp = tempDir("graft-merge14")
     rows.toDF("event_id", "user_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val got = ops.Relational.sqlMergeUpsert(spark, tmp)
@@ -141,7 +141,7 @@ class Round14Spec extends SparkSpec {
     val static = new String(Array.fill(4 * 256)('a'.toByte), "UTF-8")
     val cutty = new String((0 until 4).flatMap(fr =>
       Array.fill(256)(if (fr % 2 == 0) 0x20.toByte else 0x7e.toByte)).toArray, "UTF-8")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-video14").toString
+    val tmp = tempDir("graft-video14")
     Seq((1L, static, "en"), (2L, cutty, "en"))
       .toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -259,7 +259,7 @@ class Round14Spec extends SparkSpec {
       (0 until n).flatMap(i => Seq((o0 + i, 1, a), (o0 + i, 2, b)))
     val rows = orders(100, 1, 2, 3) ++ orders(200, 2, 3, 3) ++
       orders(300, 3, 4, 2) ++ orders(400, 4, 5, 3)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-slink14").toString
+    val tmp = tempDir("graft-slink14")
     rows.toDF("l_orderkey", "l_linenumber", "l_partkey")
       .write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val got = ops.Analytics.clusterHierarchicalCut(spark, tmp)
@@ -325,7 +325,7 @@ class Round14Spec extends SparkSpec {
     val rows = (1L to 9L).flatMap { i =>
       Seq((i * 10, 1, 0L), (i * 10, 2, i), (i * 10 + 1, 1, 0L), (i * 10 + 1, 2, i))
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-harm14").toString
+    val tmp = tempDir("graft-harm14")
     rows.toDF("l_orderkey", "l_linenumber", "l_partkey")
       .write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val got = ops.Analytics.graphHarmonicCentrality(spark, tmp)
@@ -343,8 +343,8 @@ class Round14Spec extends SparkSpec {
     def li(rows: Seq[(Long, Int, Long)], dir: String): Unit =
       rows.toDF("l_orderkey", "l_linenumber", "l_partkey")
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val dirA = java.nio.file.Files.createTempDirectory("graft-sccmemoA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft-sccmemoB").toString
+    val dirA = tempDir("graft-sccmemoA")
+    val dirB = tempDir("graft-sccmemoB")
     li(Seq(
       (10L, 1, 1L), (10L, 2, 2L), (11L, 1, 2L), (11L, 2, 1L),
       (12L, 1, 1L), (12L, 2, 2L), (13L, 1, 2L), (13L, 2, 1L),

@@ -32,9 +32,9 @@ class Round16Spec extends SparkSpec {
     Seq("parent", "split", "merged").foreach(e =>
       assert(eras.getOrElse(e, 0L) > 0, s"era $e is empty"))
 
-    val in = java.nio.file.Files.createTempDirectory("graft-reshard").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft-reshard-ck").toString
-    val ckOrd = java.nio.file.Files.createTempDirectory("graft-reshard-ck2").toString
+    val in = tempDir("graft-reshard")
+    val ck = tempDir("graft-reshard-ck")
+    val ckOrd = tempDir("graft-reshard-ck2")
     val envelope = io.EventSource.storedSchema.fieldNames.map(col)
     // ONE file per live (era, shard): rows in (ts, event_id) order — the
     // per-shard sequence-number order a Kinesis shard delivers.

@@ -85,7 +85,7 @@ class Round9Spec extends SparkSpec {
     // the sampled edge share must track the chosen 1/k, and the k³
     // rescale must still land on the exact count.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dense").toString
+    val dir = tempDir("graft-dense")
     val rnd = new scala.util.Random(42)
     val rows = for {
       o <- 1 to 1200

@@ -69,7 +69,7 @@ class Round9bSpec extends SparkSpec {
     val donor = base.find(_._1 % 2 == 0)
       .getOrElse(fail("no even-id donor in first 20 fixture rows"))
     val mutated = donor._2.updated(donor._2.length / 2, '~')
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash").toString
+    val dir = tempDir("graft-phash")
     (base.toSeq :+ ((9001L, mutated, donor._3, donor._4, donor._5)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -96,7 +96,7 @@ class Round9bSpec extends SparkSpec {
     // (l,o) and (o,w) breaks lexically to (l,o) → "lo"; round 2: (lo,w)=10
     // → "low"; round 3: (w,e) gone, (low,e)=5 beats (e,r)=2/(e,s)=3 → "lowe"
     val words = Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++ Seq.fill(3)("lowest")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = tempDir("graft-bpe")
     Seq((1L, words.mkString(" "), "en", "srcB", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

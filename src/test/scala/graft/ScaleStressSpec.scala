@@ -403,7 +403,7 @@ class ScaleStressSpec extends SparkSpec {
     "pipeline_ann_report" -> "composes the brute anchor + full-scan rungs by design (recall needs them); the gated twins are the rung keys themselves")
 
   private lazy val stressDir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft-stress").toString
+    val out = tempDir("graft-stress")
     ScaleStress.replicate(spark, sf01, out, 16)
     out
   }

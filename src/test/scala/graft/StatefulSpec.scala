@@ -243,7 +243,7 @@ abstract class StatefulSpecBase extends SparkSpec with StateStoreVariant {
     import org.apache.spark.sql.streaming.Trigger
     // time-ordered file sequence: ntile(4) over ts → each micro-batch
     // advances event time monotonically, like a live feed would
-    val in = java.nio.file.Files.createTempDirectory("graft-sess-mb").toString
+    val in = tempDir("graft-sess-mb")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("event_id"))
@@ -286,7 +286,7 @@ abstract class StatefulSpecBase extends SparkSpec with StateStoreVariant {
   test("sessionizeStream state survives a checkpointed restart mid-stream") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft-sess-ckpt").toString
+    val root = tempDir("graft-sess-ckpt")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val raw = graft.io.Tables.normalizeTs(

@@ -23,7 +23,7 @@ abstract class StreamingDedupStateSpecBase extends SparkSpec with StateStoreVari
   /** Writes each batch as one parquet file, in order, with distinct
     * mtimes so the file source reads them in that order. */
   private def stage(batches: Seq[Seq[Row]]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-state").toString
+    val dir = tempDir("graft-dedup-state")
     batches.foreach { rows =>
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), EventSource.storedSchema)

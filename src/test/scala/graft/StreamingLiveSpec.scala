@@ -24,7 +24,7 @@ abstract class StreamingLiveSpecBase extends SparkSpec with StateStoreVariant {
     * under maxFilesPerTrigger=1 replays them as separate micro-batches
     * with monotonically advancing event time. */
   private def stageChunks(nFiles: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-live").toString
+    val dir = tempDir("graft-live")
     val ev = graft.io.Tables.events(spark, sf001)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"), col("props"))
@@ -123,7 +123,7 @@ abstract class StreamingLiveSpecBase extends SparkSpec with StateStoreVariant {
     // watermark-push sentinel. Offsets must resume (batch ids advance,
     // nothing reprocessed), and the file sink's union must equal the
     // batch twin with no window emitted twice.
-    val root = java.nio.file.Files.createTempDirectory("graft-live-ckpt").toString
+    val root = tempDir("graft-live-ckpt")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val raw = graft.io.Tables.normalizeTs(

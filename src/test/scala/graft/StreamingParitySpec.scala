@@ -30,7 +30,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // True incremental execution: 4 source files arrive as 4 micro-batches;
     // windowed state must carry across batches and the final COMPLETE-mode
     // table must equal the one-shot batch aggregation.
-    val in = java.nio.file.Files.createTempDirectory("graft-mb").toString
+    val in = tempDir("graft-mb")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     (0 until 4).foreach { i =>
@@ -57,7 +57,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // The dashboard top-k split: the STREAM maintains (hour, type)
     // counts incrementally; the rank read-off runs over the maintained
     // COMPLETE-mode table — and must equal the one-shot batch twin.
-    val in = java.nio.file.Files.createTempDirectory("graft-topk").toString
+    val in = tempDir("graft-topk")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     (0 until 4).foreach { i =>
@@ -91,7 +91,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // mode re-emits the maintained state) and must land on the one-shot
     // batch compaction exactly — latest-wins must survive keys whose
     // winner arrives in an earlier batch than later losers.
-    val in = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val in = tempDir("graft-cdc")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     (0 until 4).foreach { i =>
@@ -121,7 +121,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // every REAL day window; the sentinel's own (incomplete) windows stay
     // in state and must NOT surface. Expected = the batch twin over the
     // real events only.
-    val in = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    val in = tempDir("graft-chain")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     // arrival must be TIME-ordered (ntile over ts), not hash-split: in
@@ -167,7 +167,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // aggregation stages' state AND the watermark must recover — the
     // union of the two runs' append output must equal the batch twin
     // exactly once, with no window emitted twice and none lost.
-    val root = java.nio.file.Files.createTempDirectory("graft-chain-ckpt").toString
+    val root = tempDir("graft-chain-ckpt")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val raw = graft.io.Tables.normalizeTs(
@@ -263,7 +263,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // stop, add data, restart with the SAME checkpoint — the second run
     // must process only the new file and the sink must hold each event
     // exactly once.
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val root = tempDir("graft-ckpt")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     val raw = graft.io.Tables.normalizeTs(
@@ -357,7 +357,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // batch 3 the watermark (day-3 noon − 10 min) is past day 1's window
     // end, so every day-1 cell must exit the store and the final row
     // count must be exactly the live cells.
-    val in = java.nio.file.Files.createTempDirectory("graft-kmvevict").toString
+    val in = tempDir("graft-kmvevict")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet")).limit(600)
     val firstType = raw.select(col("event_type")).orderBy(col("event_type"))
@@ -434,7 +434,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
   }
 
   test("foreachBatch bridges the stream to a batch parquet sink (sink_foreachbatch)") {
-    val outDir = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val outDir = tempDir("graft-fb")
     val q = replay
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -455,8 +455,8 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // foreachBatch (read-modify-write on the group key), state lives in
     // the sink, and the final MV must equal both the batch key and a flat
     // recompute. Integer-cents accumulation makes merge order irrelevant.
-    val in = java.nio.file.Files.createTempDirectory("graft-mv-in").toString
-    val mvDir = java.nio.file.Files.createTempDirectory("graft-mv").toString + "/mv"
+    val in = tempDir("graft-mv-in")
+    val mvDir = tempDir("graft-mv") + "/mv"
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     (0 until 4).foreach { i =>
@@ -504,8 +504,8 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // into a keyed state table (survivor = max (ts ‖ event_id) composite
     // key, same tie rule as the batch op), so the final state after the
     // stream drains must equal the one-shot batch upsert.
-    val in = java.nio.file.Files.createTempDirectory("graft-cdc-in").toString
-    val stDir = java.nio.file.Files.createTempDirectory("graft-cdc").toString + "/state"
+    val in = tempDir("graft-cdc-in")
+    val stDir = tempDir("graft-cdc") + "/state"
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     (0 until 4).foreach { i =>
@@ -579,7 +579,7 @@ abstract class StreamingParitySpecBase extends SparkSpec with StateStoreVariant 
     // files = ts quartiles (each sorted inside), then record actual
     // arrival order via foreachBatch.
     val nShards = 4
-    val in = java.nio.file.Files.createTempDirectory("graft-shard").toString
+    val in = tempDir("graft-shard")
     val raw = graft.io.Tables.normalizeTs(
       spark.read.parquet(s"$sf001/events.parquet"))
     // quantile-cut on epoch µs (approxQuantile needs a numeric column)
