@@ -100,6 +100,13 @@ object Pools {
     new SpawnedJob(t, err)
   }
 
+  /** Two independent tasks with results of different types, run as one
+    * overlapped [[runAll]] round. */
+  def both[A, B](name: String)(a: () => A, b: () => B): (A, B) = {
+    val Seq(x, y) = mapAll[Any](name, 2, Seq(a, b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
+
   /** [[runAll]] for tasks with results, preserving task order. */
   def mapAll[T](name: String, width: Int, tasks: Seq[() => T]): Seq[T] = {
     val out = new Array[Any](tasks.size)

@@ -40,6 +40,14 @@ object TempDirs {
     }
   }
 
+  /** A fresh directory named after `prefix` under `java.io.tmpdir`,
+    * deleted with everything under it when the JVM shuts down. */
+  def create(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    deleteAtExit(dir)
+    dir.toString
+  }
+
   /** Deletes `dir` and everything under it when the JVM shuts down. */
   def deleteAtExit(dir: Path): Unit = {
     hook

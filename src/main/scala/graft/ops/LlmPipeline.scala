@@ -2183,33 +2183,27 @@ object LlmPipeline {
     * metadata (√n rows) comes to the driver — the same declared metadata
     * collect the in-session builder performs when it broadcasts
     * centroids. Two tiers ([[IvfDriverRows]]): at or below the gate the
-    * vectors come to the driver through [[ivfDriverVecs]], with the cell
+    * vectors come to the driver through [[ivfDriverVecs]], then the cell
     * assignment (one (cid, vec_id) row per vector of the index written
-    * from the same table, read in the same round behind the same
-    * `limit(gate + 1)`), and [[ivfSearchLocal]] returns a local frame;
-    * past it every query is assigned its nProbe nearest cells
-    * map-side, member embeddings re-attach by id join against the vector
-    * table, and the SAME [[ivfScore]] kernel runs. */
+    * from the same table, read behind the same `limit(gate + 1)`), and
+    * [[ivfSearchLocal]] returns a local frame; past it every query is
+    * assigned its nProbe nearest cells map-side, member embeddings
+    * re-attach by id join against the vector table, and the SAME
+    * [[ivfScore]] kernel runs. The centroid read overlaps the tier's
+    * reads (no LoopConf.static block is open while they plan). */
   private[graft] def probeKnnIvfIndex(
       s: SparkSession, d: String, dir: String, gate: Int = IvfDriverRows)
       : DataFrame = {
     import s.implicits._
     val cells = s.read.schema("cid BIGINT, vec_id BIGINT")
       .parquet(s"$dir/ivf_cells.parquet")
-    // the three reads are independent jobs, so they run as one overlapped
-    // round (no LoopConf.static block is open while they plan); the cell
-    // read stops at gate + 1 rows like the vector read, and only the
-    // driver tier uses it
-    var cents: Array[(Long, Array[Float])] = null
-    var home: Array[(Long, Long)] = null
-    var driverVecs: Option[Array[(Long, Array[Float])]] = None
-    graft.Pools.runAll("graft-ivf-probe", 3, Seq(
-      () => cents = s.read.schema("cid BIGINT, centroid ARRAY<FLOAT>")
+    val (cents, driverTier) = graft.Pools.both("graft-ivf-probe")(
+      () => s.read.schema("cid BIGINT, centroid ARRAY<FLOAT>")
         .parquet(s"$dir/ivf_centroids.parquet")
         .as[(Long, Array[Float])].collect().sortBy(_._1),
-      () => home = cells.as[(Long, Long)].limit(gate + 1).collect(),
-      () => driverVecs = ivfDriverVecs(vecs(s, d), gate)))
-    val local = driverVecs.map { vs =>
+      () => ivfDriverVecs(vecs(s, d), gate).map(vs =>
+        (vs, cells.as[(Long, Long)].limit(gate + 1).collect())))
+    val local = driverTier.map { case (vs, home) =>
       val byId = vs.groupBy(_._1)
       ivfSearchLocal(s, vs, cents, home.groupBy(_._1).map { case (cid, ids) =>
         cid -> ids.flatMap { case (_, id) => byId.getOrElse(id, Array.empty) }
@@ -2245,7 +2239,8 @@ object LlmPipeline {
     * table, two schema-declared reloads and a collect of the vectors to
     * probe: 6 jobs, 7 with the job that writes the result, against 19
     * for the distributed tier at 2k vectors; the two writes overlap, and
-    * so do the three probe reads, so the 7 run in 4 serial rounds),
+    * the centroid read overlaps the vector and cell reads, so the 7 run
+    * in 5 serial rounds),
     * and the result is a local frame, so the index directory is deleted
     * before the call returns. Past the gate both halves are distributed,
     * the result reads the directory lazily, and it is deleted at JVM exit
@@ -2407,9 +2402,24 @@ object LlmPipeline {
     * driver. */
   private val MinhashDriverDocs = 8192
 
-  /** Text bytes (UTF-8) the driver tier may receive: 8 KB per document at
-    * the gate, 20× the fixtures' ~300 B mean. */
-  private val MinhashDriverBytes = 64L << 20
+  /** Text bytes (UTF-8) the driver tier may receive: 4 KB per document at
+    * the gate, 13× the fixtures' ~300 B mean. The driver holds the texts
+    * and, for every document with a candidate pair, its shingle set, so
+    * its heap grows with the text bytes. Measured in a 3 GB heap (the
+    * benchmark's), 8192 documents of random fixture text, each stored
+    * `copies` times so every one has a candidate pair (MB, peak live =
+    * the most heap any GC left during the run;
+    * `graft.MinhashHeapMeasure`):
+    * {{{
+    *   text    copies  pairs  peak live  peak in use
+    *   32 MB      2     4096      635       1467
+    *   32 MB     64   258048      773       1556
+    *   64 MB      2     4096     1248       1970
+    *   64 MB     64   258048     1352       2008
+    * }}}
+    * At 32 MB the tier keeps at most about a quarter of such a heap live;
+    * 64 MB would keep over 40%. */
+  private val MinhashDriverBytes = 32L << 20
 
   /** Candidate pairs per document the driver tier may hold, on average:
     * past `gate · MinhashDriverPairsPerDoc` candidate pairs (a corpus of
@@ -4030,9 +4040,10 @@ object LlmPipeline {
     * shingle regardless of token width. The eval side (small by
     * definition: eval sets are curated) is BROADCAST, so the train side
     * stays map-side: hash → semi-join against the broadcast set → the
-    * flagged doc_ids, broadcast into the anti-join; no all-pairs
-    * comparison, and no shuffle of raw text or ids before the output
-    * sort. (Hash-join vs the oracle's string-join differs
+    * flagged doc_ids (one row per matching shingle, so as many as the
+    * corpus holds) → anti-join, whose strategy the planner picks from
+    * the flagged side's measured size; no all-pairs comparison and no
+    * shuffle of raw text. (Hash-join vs the oracle's string-join differs
     * only on a 64-bit collision between a train and eval shingle —
     * ~10⁻¹³ at millions of shingles; the oracle gate would surface one.)
     * Docs shorter than the shingle width cannot be contaminated and skip
@@ -4041,15 +4052,15 @@ object LlmPipeline {
     val W = 12
     val docs = Tables.documents(s, d)
     // both joins only test existence, so neither side needs a distinct
-    // (a shuffle each): repeated keys in a broadcast build side change
-    // no semi/anti-join row
+    // (a shuffle each): repeated build-side keys change no semi/anti-join
+    // row
     val evalShingles = docShingleHashes(docs.where(col("doc_id") < 100), W)
       .select(col("gh"))
     val contaminated = docShingleHashes(docs.where(col("doc_id") >= 100), W)
       .join(broadcast(evalShingles), Seq("gh"), "left_semi")
       .select(col("doc_id"))
     docs.where(col("doc_id") >= 100)
-      .join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+      .join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -4093,9 +4104,9 @@ object LlmPipeline {
     val suspects = docShingleHashes(docs.where(col("doc_id") >= 100), W)
       .where(org.apache.spark.sql.GraftBridge.bloomMightContain(
         filterBytes, col("gh")))
-      .select(col("doc_id"))
+      .select(col("doc_id")).distinct()
     docs.where(col("doc_id") >= 100)
-      .join(broadcast(suspects), Seq("doc_id"), "left_anti")
+      .join(suspects, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }

@@ -26,13 +26,13 @@ class CollectLintSpec extends AnyFunSuite {
       ("restart reload of the SAME sqrt(n)-row centroid metadata " +
         "ivfCentroids built; the cell assignment (ids only, one row per " +
         "vector) is read behind limit(gate + 1), at most 4097 id pairs, " +
-        "and used only when ivfDriverVecs has found at most " +
+        "and only after ivfDriverVecs has found at most " +
         "IvfDriverRows (4096) vectors, past which it stays a parquet join"),
     ("LlmPipeline.scala", "minhashDriverDocs") ->
       ("minhash driver tier: first about gate + 1 byte lengths behind " +
         "a limit (MinhashDriverDocs = 8192 ints), then the texts only when there " +
         "are at most gate documents holding at most MinhashDriverBytes " +
-        "(64 MB) in all, both behind a limit; past either bound the " +
+        "(32 MB) in all, both behind a limit; past either bound the " +
         "band buckets and the verification run on executors"),
     ("LlmPipeline.scala", "ivfDriverVecs") ->
       ("IVF driver tier: at most gate + 1 vectors (IvfDriverRows = 4096, " +

@@ -18,10 +18,9 @@ class MinhashTierSpec extends SparkSpec {
   /** A table directory holding `docs` as its documents table, deleted
     * when the test JVM exits. */
   private def documentsDir(docs: DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-minhash-tier")
-    TempDirs.deleteAtExit(dir)
+    val dir = tempDir("graft-minhash-tier")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir.toString
+    dir
   }
 
   /** A documents table of `texts`, each doc_id its position. */

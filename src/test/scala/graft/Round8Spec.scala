@@ -236,8 +236,7 @@ class Round8Spec extends SparkSpec {
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .as[(Long, Long, String, java.sql.Timestamp)].collect()
       .sortBy(e => (usOf(e._4), e._2))
-    val histDir = java.nio.file.Files
-      .createTempDirectory("graft-scd2-inc").toString + "/hist"
+    val histDir = tempDir("graft-scd2-inc") + "/hist"
     def emptyHist(b: org.apache.spark.sql.DataFrame) = b
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("ts").as("valid_from"), col("ts").as("valid_to"),

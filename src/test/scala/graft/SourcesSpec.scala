@@ -22,8 +22,7 @@ class SourcesSpec extends SparkSpec {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-src-$tag").toString
+  private def tmp(tag: String) = tempDir(s"graft-src-$tag")
 
   test("csv round-trip with explicit schema and timestamp format") {
     val dir = tmp("csv")

@@ -32,11 +32,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A fresh directory under `java.io.tmpdir`, deleted with everything
     * under it when the test JVM exits. */
-  def tempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    TempDirs.deleteAtExit(dir)
-    dir.toString
-  }
+  def tempDir(prefix: String): String = TempDirs.create(prefix)
 
   private val group = "graft-spec-jobs-during"
 

@@ -10,9 +10,7 @@ object StressMeasure {
     val spark = Session.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf01 = "/root/testdata/sf0.01"
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stress")
-    TempDirs.deleteAtExit(outDir)
-    val out = outDir.toString
+    val out = TempDirs.create("graft-stress")
     ScaleStress.replicate(spark, sf01, out, 16)
     def timeOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
