@@ -5,7 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.broadcast.Broadcast
 
 /** Registry of broadcasts built by the broadcast-kernel operators
-  * (knn_cosine, sim_threshold, knn_ivf, knn_lsh_bucketed).
+  * (knn_cosine, sim_threshold, knn_ivf, knn_lsh_bucketed,
+  * decontaminate_ngram, decontaminate_bloom).
   *
   * A long-lived session running many queries back-to-back (Bench, Verify)
   * must release one query's broadcast before timing the next: the r01

@@ -19,11 +19,15 @@ import java.util.concurrent.atomic.AtomicInteger
   *    assert at teardown that none are left alive.
   */
 object Pools {
-  private def factory(name: String): ThreadFactory = new ThreadFactory {
+  /** Names its threads and keeps them: a terminated pool can still have
+    * a worker thread finishing its exit, so [[runAll]] joins them. */
+  private final class Factory(name: String) extends ThreadFactory {
     private val n = new AtomicInteger(0)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
     def newThread(r: Runnable): Thread = {
       val t = new Thread(r, s"$name-${n.incrementAndGet()}")
       t.setDaemon(true)
+      threads.add(t)
       t
     }
   }
@@ -47,8 +51,9 @@ object Pools {
   def runAll(name: String, width: Int, tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
     if (tasks.size == 1) { tasks.head(); return }
+    val factory = new Factory(name)
     val pool = Executors.newFixedThreadPool(
-      math.min(width, tasks.size), factory(name))
+      math.min(width, tasks.size), factory)
     try {
       val futures = tasks.map(t => pool.submit(new Runnable {
         def run(): Unit = t()
@@ -67,7 +72,8 @@ object Pools {
       if (firstErr != null) throw firstErr
     } finally {
       pool.shutdown()
-      pool.awaitTermination(300, TimeUnit.SECONDS)
+      if (pool.awaitTermination(300, TimeUnit.SECONDS))
+        factory.threads.forEach(_.join())
     }
   }
 

@@ -155,7 +155,7 @@ object LlmPipeline {
     *
     * Scale: segments explode map-side; the only shuffle is keyed by the
     * segment (at 100 TB the segment would hash to an 8-byte long first —
-    * the [[docShingleHashesOf]] move; here the string IS the oracle join
+    * the [[docShingleHashes]] move; here the string IS the oracle join
     * key). The survivor window partitions by segment — bounded by copy
     * count per segment — and reassembly is one partial-aggregable groupBy
     * on doc_id with a sort_array'd collect_list (per-doc segment count is
@@ -2278,7 +2278,7 @@ object LlmPipeline {
   /** The ONE whitespace tokenizer every JVM shingle/signature kernel
     * shares: split(" ", -1) KEEPS trailing empty tokens — parity with
     * Catalyst split(text, " ") (limit -1) and DuckDB string_split, and
-    * with [[docShingleHashesOf]]'s hashed-shingle kernel. r8 shipped two
+    * with [[docShingleHashes]]'s hashed-shingle kernel. r8 shipped two
     * kernels on split(' ') (drops trailing empties), so the two shingle
     * definitions silently disagreed on trailing-space docs. */
   private[graft] def wsTokens(text: String): Array[String] =
@@ -2555,7 +2555,7 @@ object LlmPipeline {
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("corpus_id"))
       .distinct()
-    val newSh = docShingleHashesOf(newDocs, 3)
+    val newSh = docShingleHashes(newDocs, 3)
     val nA = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_a"))
     val nB = shingleIdx.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
       .withColumnRenamed("doc_id", "corpus_id")
@@ -2592,7 +2592,7 @@ object LlmPipeline {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val corpus = docs.where(col("doc_id") % 2 === 0)
     scoreAgainstMinhashIndex(docs.where(col("doc_id") % 2 === 1),
-      minhashBandsOf(corpus), docShingleHashesOf(corpus, 3))
+      minhashBandsOf(corpus), docShingleHashes(corpus, 3))
       .orderBy(col("doc_id"))
   }
 
@@ -2629,7 +2629,7 @@ object LlmPipeline {
     val writes = Seq[() => Unit](
       () => minhashBandsOf(corpusDocs)
         .write.mode("overwrite").parquet(s"$dir/minhash_bands.parquet"),
-      () => docShingleHashesOf(corpusDocs, 3)
+      () => docShingleHashes(corpusDocs, 3)
         .write.mode("overwrite").parquet(s"$dir/minhash_shingles.parquet"),
       () => curateBoundsOf(corpusDocs)
         .write.mode("overwrite").parquet(s"$dir/curate_bounds.parquet"),
@@ -2763,7 +2763,7 @@ object LlmPipeline {
       s: SparkSession, corpus: DataFrame, arriving: DataFrame): DataFrame =
     curateAgainstAssets(s, arriving,
       curateBoundsOf(corpus), curateDigestIndexOf(corpus),
-      minhashBandsOf(corpus), docShingleHashesOf(corpus, 3))
+      minhashBandsOf(corpus), docShingleHashes(corpus, 3))
 
   /** The corpus-calibrated quality band (one row) — a property of the
     * CORPUS, persisted with the other curate assets across restarts. */
@@ -2828,19 +2828,25 @@ object LlmPipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** 64-bit SimHash of whitespace words, JVM-side: per word the SAME
-    * xxhash64 (seed 42) Spark's `xxhash64` expression computes, +1/-1 per
-    * bit position summed over words, sign → signature bit. A Catalyst
-    * formulation (64 `aggregate` HOFs) is interpreted row-at-a-time —
+  /** XXH64 (seed 42) of a word's UTF-8 bytes — the value Spark's
+    * `xxhash64` expression gives the same string (pinned in LlmOpsSpec).
+    * The one word hash of [[simhash64]] and [[shingleHashes64]]. */
+  private[graft] def wordHash64(w: String): Long = {
+    val b = w.getBytes("UTF-8")
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+  }
+
+  /** 64-bit SimHash of whitespace words, JVM-side: per word
+    * [[wordHash64]], +1/-1 per bit position summed over words, sign →
+    * signature bit. A Catalyst formulation (64 `aggregate` HOFs) is
+    * interpreted row-at-a-time —
     * measured ~30 s per side at sf0.1 once a downstream join actually
     * forces the columns; this loop is <100 ms. */
   private def simhash64(text: String): Long = {
     val counts = new Array[Int](64)
     wsTokens(text).foreach { w =>
-      val b = w.getBytes("UTF-8")
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          b.length, 42L)
+      val h = wordHash64(w)
       var i = 0
       while (i < 64) {
         if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
@@ -2922,67 +2928,49 @@ object LlmPipeline {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Directional containment scoring — the dedup-family member that
-    * resemblance (Jaccard) misses: C(A→B) = |S_A ∩ S_B| / |S_A| is ≈1
-    * when A is quoted inside a much larger B even though their Jaccard is
-    * tiny. Emits each candidate pair once with BOTH directions (c_a,
-    * c_b); keep pairs where either direction clears 0.5 — the
-    * "document-inside-document" verdicts a decontamination/license sweep
-    * needs.
-    *
-    * Scale (unlike [[dedupNgramJaccard]]'s deliberately fixture-bounded
-    * all-pairs baseline): candidates come from an INVERTED INDEX —
-    * distinct 5-word shingles hashed to 8-byte longs pre-shuffle, groupBy
-    * shingle, bounded pair expansion (df ≤ 64 — ultra-common shingles are
-    * boilerplate, which carries no containment signal and would emit df²
-    * pairs; text_boilerplate_ratio owns that diagnosis). 5-word shingles,
-    * not 3: on a small-vocabulary corpus 3-grams hit df≈40+ on every
-    * shingle (quadratic candidate volume), while 5-grams leave only
-    * genuinely shared spans as candidates — candidate volume tracks true
-    * containment density, the same output-bound argument as minhash
-    * banding. */
-  /** (doc_id, h): DISTINCT n-word shingles per document, hashed to 8-byte
-    * longs in a typed JVM loop — the shared shingle front-end of
-    * [[dedupContainment]], [[Quant.textBoilerplateRatio]] and
-    * [[Quant.textNgramNovelty]]. The minhash/simhash lesson applies
-    * twice: Catalyst HOF chains (transform/concat_ws) are interpreted
-    * row-at-a-time (~4× slower measured at sf0.1), and string shingles
-    * shuffle at ~20× the bytes of a long. XXH64 seed 42 keeps hash
-    * parity with the engine's xxhash64 expression (pinned in LlmOpsSpec);
-    * DuckDB twins join on the shingle STRING — equivalent up to 2⁻⁶⁴
-    * collisions. */
-  private[ops] def docShingleHashes(
-      s: SparkSession, d: String, n: Int): DataFrame =
-    docShingleHashesOf(Tables.documents(s, d), n)
+  /** 64-bit hashes of one document's n-word windows — the one shingle
+    * hash of the text operators (the minhash band keys excepted, which
+    * stay on string shingles): split with limit -1 (trailing empty tokens
+    * survive, matching SQL split/string_split), [[wordHash64]] per token
+    * (full 64-bit — a 32-bit token hash caps shingle collision resistance
+    * at 2⁻³² per differing-token pair), FNV-1a combine across each
+    * window. O(tokens·n) integer ops and no shingle string: building
+    * every 12-word string before hashing cost ~1.8 s at sf0.1. */
+  private[graft] def shingleHashes64(text: String, w: Int): Array[Long] = {
+    val t = wsTokens(text)
+    if (t.length < w) Array.emptyLongArray
+    else {
+      val th = t.map(wordHash64)
+      val out = new Array[Long](t.length - w + 1)
+      var j = 0
+      while (j < out.length) {
+        var h = 0xcbf29ce484222325L
+        var k = j
+        while (k < j + w) { h = h * 0x100000001b3L ^ th(k); k += 1 }
+        out(j) = h
+        j += 1
+      }
+      out
+    }
+  }
 
-  /** [[docShingleHashes]] over an explicit (doc_id, text, …) frame — the
-    * cascade stages shingle SURVIVOR sets, not the raw table. */
-  private[graft] def docShingleHashesOf(docs: DataFrame, n: Int): DataFrame = {
+  /** (doc_id, h): the DISTINCT [[shingleHashes64]] of each document of a
+    * (doc_id, text, …) frame, in a typed JVM loop — the shared shingle
+    * front-end of [[dedupContainment]], the minhash index's verification
+    * shingles, [[Quant.textBoilerplateRatio]] and [[Quant.textNgramNovelty]].
+    * The minhash/simhash lesson applies twice: Catalyst HOF chains
+    * (transform/concat_ws) are interpreted row-at-a-time (~4× slower
+    * measured at sf0.1), and string shingles shuffle at ~20× the bytes of
+    * a long. DuckDB twins join on the shingle STRING — equivalent up to
+    * 64-bit collisions (none among the distinct 3- and 5-word shingles of
+    * sf0.01 or sf0.1). */
+  private[graft] def docShingleHashes(docs: DataFrame, n: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     docs
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
-        val words = wsTokens(text)
-        if (words.length < n) Iterator.empty
-        else {
-          val seen = scala.collection.mutable.HashSet.empty[Long]
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var i = 0
-          while (i + n <= words.length) {
-            val sb = new java.lang.StringBuilder(words(i))
-            var k = 1
-            while (k < n) { sb.append(' ').append(words(i + k)); k += 1 }
-            val b = sb.toString.getBytes("UTF-8")
-            val h = org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashUnsafeBytes(b,
-                org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                b.length, 42L)
-            if (seen.add(h)) out += ((id, h))
-            i += 1
-          }
-          out.iterator
-        }
+        shingleHashes64(text, n).distinct.iterator.map(h => (id, h))
       }
       .toDF("doc_id", "h")
   }
@@ -2991,8 +2979,9 @@ object LlmPipeline {
     * non-boilerplate shingles, both directions Det-rounded) over an
     * explicit document frame — the shared core of [[dedupContainment]]
     * and [[pipelineDedupCascade]] (which scores SURVIVORS, not the raw
-    * table). */
-  /** persistShingles: the (doc_id, h) frame has two readers (size agg +
+    * table).
+    *
+    * persistShingles: the (doc_id, h) frame has two readers (size agg +
     * candidate build). Over a RAW table scan re-running the shingle
     * flatMap is cheaper than materializing ~1M rows to block storage
     * (0.67 s vs 1.02 s measured for dedup_containment at sf0.1), but
@@ -3002,7 +2991,7 @@ object LlmPipeline {
       docs: DataFrame, persistShingles: Boolean = false): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val raw = docShingleHashesOf(docs, 5)
+    val raw = docShingleHashes(docs, 5)
     val docSh = if (persistShingles) raw.persist() else raw
     val sizes = docSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val cand = docSh.groupBy(col("h"))
@@ -3030,6 +3019,25 @@ object LlmPipeline {
           .as("c_b"))
   }
 
+  /** Directional containment scoring — the dedup-family member that
+    * resemblance (Jaccard) misses: C(A→B) = |S_A ∩ S_B| / |S_A| is ≈1
+    * when A is quoted inside a much larger B even though their Jaccard is
+    * tiny. Emits each candidate pair once with BOTH directions (c_a,
+    * c_b); keep pairs where either direction clears 0.5 — the
+    * "document-inside-document" verdicts a decontamination/license sweep
+    * needs.
+    *
+    * Scale (unlike [[dedupNgramJaccard]]'s deliberately fixture-bounded
+    * all-pairs baseline): candidates come from an INVERTED INDEX —
+    * distinct 5-word shingles hashed to 8-byte longs pre-shuffle, groupBy
+    * shingle, bounded pair expansion (df ≤ 64 — ultra-common shingles are
+    * boilerplate, which carries no containment signal and would emit df²
+    * pairs; text_boilerplate_ratio owns that diagnosis). 5-word shingles,
+    * not 3: on a small-vocabulary corpus 3-grams hit df≈40+ on every
+    * shingle (quadratic candidate volume), while 5-grams leave only
+    * genuinely shared spans as candidates — candidate volume tracks true
+    * containment density, the same output-bound argument as minhash
+    * banding. */
   def dedupContainment(s: SparkSession, d: String): DataFrame =
     containmentScores(Tables.documents(s, d))
       .where(greatest(col("c_a"), col("c_b")) >= 0.5)
@@ -3044,7 +3052,7 @@ object LlmPipeline {
     * role, lifted from exact digests to shingle sets — at 100 TB it is
     * a bucketed table keyed on h). */
   private[graft] def containmentIndexOf(corpus: DataFrame): DataFrame =
-    docShingleHashesOf(corpus, 5)
+    docShingleHashes(corpus, 5)
       .groupBy(col("h"))
       .agg(collect_set(col("doc_id")).as("ds"))
       .where(size(col("ds")) <= 64)
@@ -3057,7 +3065,7 @@ object LlmPipeline {
     * side ships (h, ids) index rows, never bodies. */
   private[graft] def scoreAgainstIndex(
       newDocs: DataFrame, idx: DataFrame): DataFrame = {
-    val newSh = docShingleHashesOf(newDocs, 5)
+    val newSh = docShingleHashes(newDocs, 5)
     val sizes = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     newSh.join(idx, Seq("h"))
       .select(col("doc_id"), explode(col("ds")).as("corpus_id"))
@@ -3981,132 +3989,77 @@ object LlmPipeline {
 
   // -------------------------------------- decontamination + quantization
 
-  /** 64-bit shingle hashes of one document — the ONE hashing shared by
-    * [[decontaminateNgram]]'s batch kernel and its streaming twin
-    * (Round6Spec): split with limit -1 (trailing empty tokens survive,
-    * matching SQL split/string_split), XXH64 per token (full 64-bit — a
-    * 32-bit token hash caps shingle collision resistance at 2⁻³² per
-    * differing-token pair), FNV-1a combine across each w-token window. */
-  private[graft] def shingleHashes64(text: String, w: Int): Array[Long] = {
-    val t = wsTokens(text)
-    if (t.length < w) Array.emptyLongArray
-    else {
-      val th = new Array[Long](t.length)
-      var i = 0
-      while (i < t.length) {
-        val b = t(i).getBytes("UTF-8")
-        th(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(b,
-            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-            b.length, 42L)
-        i += 1
-      }
-      val out = new Array[Long](t.length - w + 1)
-      var j = 0
-      while (j < out.length) {
-        var h = 0xcbf29ce484222325L
-        var k = j
-        while (k < j + w) { h = h * 0x100000001b3L ^ th(k); k += 1 }
-        out(j) = h
-        j += 1
-      }
-      out
-    }
-  }
-
-  // Shingle hashing is a typed JVM kernel, not a HOF lambda chain:
-  // Catalyst higher-order functions run INTERPRETED, and building every
-  // 12-token shingle string before hashing cost ~1.8 s at sf0.1. Here
-  // each token is murmur-hashed once, then each window combines 12 longs
-  // FNV-style — O(tokens·W) integer ops, zero string materialization.
-  // Shared by the exact and bloom decontamination tiers.
-  private def docShingleHashes(df: DataFrame, w: Int): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    df.select(col("doc_id"), col("text")).as[(Long, String)]
-      .repartition(s.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          shingleHashes64(text, w).iterator.map(h => (id, h))
-        }
-      }.toDF("doc_id", "gh")
-  }
-
   /** Train/eval decontamination: drop every train doc (doc_id ≥ 100)
     * sharing ANY 12-token shingle with the eval slice (doc_id < 100) —
     * the n-gram-overlap screen run before an eval set is trusted.
     *
     * Scale: shingles travel as 64-bit HASHES, never strings — 8 bytes per
     * shingle regardless of token width. The eval side (small by
-    * definition: eval sets are curated) is BROADCAST, so the train side
-    * stays map-side: hash → semi-join against the broadcast set → the
-    * flagged doc_ids (one row per matching shingle, so as many as the
-    * corpus holds) → anti-join, whose strategy the planner picks from
-    * the flagged side's measured size; no all-pairs comparison and no
-    * shuffle of raw text. (Hash-join vs the oracle's string-join differs
+    * definition: eval sets are curated) comes to the driver as its
+    * shingle-hash set and is BROADCAST, so the train side is one filtered
+    * scan ([[decontaminated]]): no join, no all-pairs comparison and no
+    * shuffle of raw text. (Hash-set vs the oracle's string-join differs
     * only on a 64-bit collision between a train and eval shingle —
     * ~10⁻¹³ at millions of shingles; the oracle gate would surface one.)
-    * Docs shorter than the shingle width cannot be contaminated and skip
-    * shingling entirely. */
+    * Docs shorter than the shingle width cannot be contaminated and hash
+    * no window. */
   def decontaminateNgram(s: SparkSession, d: String): DataFrame = {
-    val W = 12
+    import s.implicits._
     val docs = Tables.documents(s, d)
-    // both joins only test existence, so neither side needs a distinct
-    // (a shuffle each): repeated build-side keys change no semi/anti-join
-    // row
-    val evalShingles = docShingleHashes(docs.where(col("doc_id") < 100), W)
-      .select(col("gh"))
-    val contaminated = docShingleHashes(docs.where(col("doc_id") >= 100), W)
-      .join(broadcast(evalShingles), Seq("gh"), "left_semi")
-      .select(col("doc_id"))
-    docs.where(col("doc_id") >= 100)
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .orderBy(col("doc_id"))
+    val evalSet = docShingleHashes(docs.where(col("doc_id") < 100), DecontamWidth)
+      .select(col("h")).as[Long].collect().toSet
+    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(evalSet))
+    decontaminated(docs, bc)(_ contains _)
   }
 
   /** Query key `decontaminate_bloom`: the SCALE tier of
     * [[decontaminateNgram]] — the exact form broadcasts the full
     * distinct eval-shingle set (gigabytes once the benchmark suite is
-    * real); this one compresses it into a 1%-fpp Bloom filter (~10 bits
-    * per gram, built executor-side by stat.bloomFilter's mergeable
-    * partial aggregation) and tests every training gram MAP-SIDE
-    * through the engine's codegen'd BloomFilterMightContain — the
-    * Dolma/FineWeb production decontamination shape. One-sided by
-    * construction: the filter can only over-flag (false positives), so
-    * the bloom-clean corpus is a SUBSET of the exact-clean corpus —
-    * benchmark contamination can never slip through, a curation pass
-    * can only lose (fpp-bounded) innocent documents. Oracle-exempt
+    * real); this one compresses it into a Bloom filter (built
+    * executor-side by stat.bloomFilter's mergeable partial aggregation)
+    * and tests every training gram with `mightContainLong` in the same
+    * filtered scan ([[decontaminated]]) — the Dolma/FineWeb production
+    * decontamination shape. One-sided by construction: the filter can
+    * only over-flag (false positives), so the bloom-clean corpus is a
+    * SUBSET of the exact-clean corpus — benchmark contamination can
+    * never slip through, a curation pass can only lose (fpp-bounded)
+    * innocent documents. Oracle-exempt
     * (filter layout is engine-specific); Round11dSpec pins the subset
     * property, the fpp-bounded loss, and determinism. */
   def decontaminateBloom(s: SparkSession, d: String): DataFrame = {
-    val W = 12
     val docs = Tables.documents(s, d)
-    val evalShingles = docShingleHashes(docs.where(col("doc_id") < 100), W)
-      .select(col("gh")).distinct()
+    val evalShingles =
+      docShingleHashes(docs.where(col("doc_id") < 100), DecontamWidth)
     // capacity from the build side itself (joinBloomPrefilter's rule):
     // a fixed capacity silently degrades fpp once the eval suite grows
     val approxKeys = evalShingles
-      .agg(approx_count_distinct(col("gh")).as("n")).head().getLong(0)
+      .agg(approx_count_distinct(col("h")).as("n")).head().getLong(0)
     // fpp is a PER-GRAM rate and a document is flagged if ANY of its
     // ~n_words-W grams hits, so the per-doc false-flag rate is
     // ≈ grams·fpp — 1e-4 keeps it ~0.4% on 40-gram docs where the
     // usual 1% would false-flag a third of the corpus; at ~19 bits/gram
-    // the filter is still ~4× smaller than the raw 64-bit hash set,
-    // with no shuffle at probe time
+    // the filter is still ~4× smaller than the raw 64-bit hash set
     val bf = evalShingles.stat.bloomFilter(
-      "gh", math.max(1000L, approxKeys * 5L / 4L), 1e-4)
-    val filterBytes = {
-      val os = new java.io.ByteArrayOutputStream()
-      bf.writeTo(os)
-      os.toByteArray
+      "h", math.max(1000L, approxKeys * 5L / 4L), 1e-4)
+    val bc = graft.Broadcasts.track(s.sparkContext.broadcast(bf))
+    decontaminated(docs, bc)(_ mightContainLong _)
+  }
+
+  private val DecontamWidth = 12
+
+  /** The train slice (doc_id ≥ 100) less every document one of whose
+    * [[DecontamWidth]]-word shingle hashes `hit`s the broadcast eval
+    * side: a stateless per-document screen against a static set (the
+    * form of the streaming twin in Round6Spec), so the train side is one
+    * filtered scan that holds no join and shuffles no text. */
+  private def decontaminated[E](
+      docs: DataFrame, eval: org.apache.spark.broadcast.Broadcast[E])(
+      hit: (E, Long) => Boolean): DataFrame = {
+    val clean = udf { (text: String) =>
+      val e = eval.value
+      !shingleHashes64(text, DecontamWidth).exists(hit(e, _))
     }
-    val suspects = docShingleHashes(docs.where(col("doc_id") >= 100), W)
-      .where(org.apache.spark.sql.GraftBridge.bloomMightContain(
-        filterBytes, col("gh")))
-      .select(col("doc_id")).distinct()
-    docs.where(col("doc_id") >= 100)
-      .join(suspects, Seq("doc_id"), "left_anti")
+    docs.where(col("doc_id") >= 100 && clean(col("text")))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .orderBy(col("doc_id"))
   }

@@ -1092,16 +1092,13 @@ object Quant {
     * divide; docs shorter than the shingle window are excluded on both
     * sides.
     *
-    * Scale: shingles explode map-side and the corpus-frequency count is
-    * one partial-aggregable (shingle) shuffle; at 100 TB shingles hash
-    * to longs before shuffling (the decontaminate_ngram kernel — 8 B per
-    * shingle) and the doc-frequency table semi-joins back. The HOF
-    * shingle build is interpreted, not codegen'd — fine off the hot
-    * path; the typed kernel is the hot-path variant. */
+    * Scale: shingles are hashed to 8-byte longs map-side by the typed
+    * [[LlmPipeline.docShingleHashes]] kernel, the corpus-frequency count
+    * is one partial-aggregable (shingle hash) shuffle, and the
+    * doc-frequency table joins back. */
   def textBoilerplateRatio(s: SparkSession, d: String): DataFrame = {
-    // shared JVM shingle-hash kernel (longs, not strings, pre-shuffle);
     // persisted: the frame feeds both the df count and the join-back
-    val sh = LlmPipeline.docShingleHashes(s, d, 3).persist()
+    val sh = LlmPipeline.docShingleHashes(Tables.documents(s, d), 3).persist()
     // rows are (doc, shingle)-distinct already — plain count IS the
     // document frequency, no second distinct expansion
     val df = sh.groupBy(col("h"))
@@ -1611,12 +1608,12 @@ object Quant {
     * this doc add?") that complements text_boilerplate_ratio's
     * corpus-frequency view. Exact integer counts plus one divide.
     *
-    * Scale: same shingle kernel as boilerplate — map-side explode, one
-    * partial-aggregable (shingle → min doc_id) shuffle; shingles hash to
-    * longs at 100 TB (decontaminate kernel). */
+    * Scale: same typed shingle-hash kernel as boilerplate — longs hashed
+    * map-side, one partial-aggregable (shingle hash → min doc_id)
+    * shuffle. */
   def textNgramNovelty(s: SparkSession, d: String): DataFrame = {
-    // shared JVM shingle-hash kernel; persisted for its two readers
-    val sh = LlmPipeline.docShingleHashes(s, d, 3).persist()
+    // persisted for its two readers
+    val sh = LlmPipeline.docShingleHashes(Tables.documents(s, d), 3).persist()
     val owner = sh.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(owner, Seq("h"))
       .groupBy(col("doc_id"))

@@ -39,6 +39,11 @@ class CollectLintSpec extends AnyFunSuite {
         "~1 MB of 64-d floats; the n^1.5 probe sets the bound), a " +
         "limit, not a per-partition take; past it the index builds and " +
         "probes on executors"),
+    ("LlmPipeline.scala", "decontaminateNgram") ->
+      ("the eval slice's distinct 12-word shingle hashes: doc_id < 100, " +
+        "so at most 100 documents' windows (4.4k longs at sf0.1) — the set " +
+        "the broadcast() hint of a join would ship through the driver " +
+        "anyway; decontaminate_bloom is the scale twin"),
     ("LlmPipeline.scala", "knnQuantized") ->
       "4x-smaller int8 grid quantized on executors; fp32 rescore is a join",
     ("LlmPipeline.scala", "knnBinaryHamming") ->

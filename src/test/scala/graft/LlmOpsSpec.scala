@@ -148,17 +148,14 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("JVM simhash word hash equals Spark's xxhash64 expression") {
-    // dedupSimhash computes signatures in a JVM loop for speed; its per-word
-    // hash must stay the hash the engine's xxhash64 column would produce.
+    // simhash and the shingle hashes run in JVM loops for speed; their
+    // per-word hash (wordHash64) must stay the hash the engine's xxhash64
+    // column would produce.
     import spark.implicits._
     val words = Seq("the", "fast", "Straße", "", "a b", "123")
     val expected = words.toDF("w")
       .select(xxhash64(col("w"))).collect().map(_.getLong(0))
-    val actual = words.map { w =>
-      val b = w.getBytes("UTF-8")
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-    }
+    val actual = words.map(LlmPipeline.wordHash64)
     assert(actual == expected.toSeq)
   }
 

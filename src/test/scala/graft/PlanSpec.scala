@@ -411,15 +411,23 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("from_json"), plan)
   }
 
-  test("decontaminate_ngram broadcasts the eval shingle set (train side never shuffles text)") {
-    val plan = physical(LlmPipeline.decontaminateNgram(spark, sf01))
-    // semi-join against eval shingles AND anti-join of contaminated ids
-    // both resolve as broadcasts — the train corpus is never the build side
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftSemi") && plan.contains("LeftAnti"),
-      s"expected broadcast semi+anti joins in:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"a decontamination join degraded to SMJ (would shuffle shingles):\n$plan")
+  test("decontamination screens the train slice in one scan (no join, no text exchange)") {
+    // both keys are a per-document filter against a broadcast eval set:
+    // the plan must hold no join at all, and no Exchange may carry the
+    // raw text column (only the output sort's exchange may remain)
+    for ((key, df) <- Seq(
+        "decontaminate_ngram" -> LlmPipeline.decontaminateNgram(spark, sf01),
+        "decontaminate_bloom" -> LlmPipeline.decontaminateBloom(spark, sf01))) {
+      df.collect()
+      val nodes = org.apache.spark.sql.GraftBridge.deepPlanNodes(
+        df.queryExecution.executedPlan)
+      val joins = nodes.filter(_.nodeName.contains("Join"))
+      assert(joins.isEmpty, s"$key plans a join:\n${physical(df)}")
+      val textExchanges = nodes.filter(n =>
+        n.nodeName.contains("Exchange") && n.output.exists(_.name == "text"))
+      assert(textExchanges.isEmpty,
+        s"$key exchanges the train text:\n${physical(df)}")
+    }
   }
 
   test("join_interval_overlap: banding keeps the overlap an equi-join (no nested loop)") {

@@ -495,11 +495,18 @@ class PropertySpec extends SparkSpec {
     // r8 regression class: shingleSet/simhash used split(' ') (drops
     // trailing empties) while the hashed-shingle kernel used
     // split(" ", -1) — the two shingle definitions silently disagreed on
-    // any doc ending in a space. All kernels now share wsTokens.
+    // any doc ending in a space. All kernels now share wsTokens, and the
+    // (doc_id, h) frame builder emits each doc's distinct window hashes.
     import graft.ops.LlmPipeline
+    import spark.implicits._
     val docs = Seq("alpha beta gamma delta ", "x y z  ", "a b ", " lead in",
-      "no trailing here", "double  inner space ")
-    for (doc <- docs) {
+      "no trailing here", "double  inner space ", "a b a b a b")
+    val framed = LlmPipeline.docShingleHashes(
+        docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+          .toDF("doc_id", "text"), 3)
+      .as[(Long, Long)].collect().groupBy(_._1)
+      .map { case (id, rows) => id -> rows.map(_._2).toSeq }
+    for ((doc, id) <- docs.zipWithIndex) {
       val toks = LlmPipeline.wsTokens(doc)
       assert(toks.length == doc.count(_ == ' ') + 1,
         s"wsTokens dropped tokens on <$doc>")
@@ -513,6 +520,9 @@ class PropertySpec extends SparkSpec {
       val nHashed = LlmPipeline.shingleHashes64(doc, 3).length
       assert(nHashed == expect.length,
         s"hashed-shingle kernel window count ${nHashed} != ${expect.length} on <$doc>")
+      val rows = framed.getOrElse(id.toLong, Seq.empty).sorted
+      assert(rows == LlmPipeline.shingleHashes64(doc, 3).distinct.toSeq.sorted,
+        s"docShingleHashes rows diverge from the kernel's distinct windows on <$doc>")
     }
   }
 

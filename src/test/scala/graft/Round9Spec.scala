@@ -124,9 +124,9 @@ class Round9Spec extends SparkSpec {
     // (a pair sharing none has Jaccard 0 and cannot pass 0.8), same
     // verification, no banding — equality proves the band index lost
     // nothing at this fixture (the batch op's recall pin, arrival-shaped)
-    val oddSh = LlmPipeline.docShingleHashesOf(
+    val oddSh = LlmPipeline.docShingleHashes(
       docs.where(col("doc_id") % 2 === 1), 3)
-    val evenSh = LlmPipeline.docShingleHashesOf(
+    val evenSh = LlmPipeline.docShingleHashes(
       docs.where(col("doc_id") % 2 === 0), 3)
     val nA = oddSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_a"))
     val nB = evenSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
@@ -161,7 +161,7 @@ class Round9Spec extends SparkSpec {
     val corpus = docs.where(col("doc_id") % 2 === 0)
     // the static assets: built ONCE, persisted, reused by every batch
     val bandIdx = LlmPipeline.minhashBandsOf(corpus).persist()
-    val shIdx = LlmPipeline.docShingleHashesOf(corpus, 3).persist()
+    val shIdx = LlmPipeline.docShingleHashes(corpus, 3).persist()
     val arriving = docs.where(col("doc_id") % 2 === 1)
       .as[(Long, String)].collect()
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -310,14 +310,14 @@ class Round9Spec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     assert(LlmPipeline.scoreAgainstMinhashIndex(empty,
       LlmPipeline.minhashBandsOf(corpus),
-      LlmPipeline.docShingleHashesOf(corpus, 3)).count() == 0,
+      LlmPipeline.docShingleHashes(corpus, 3)).count() == 0,
       "minhash scorer emitted rows for an empty batch")
     assert(LlmPipeline.scoreAgainstIndex(empty,
       LlmPipeline.containmentIndexOf(corpus)).count() == 0,
       "containment scorer emitted rows for an empty batch")
     assert(LlmPipeline.scoreAgainstMinhashIndex(corpus.limit(5),
       LlmPipeline.minhashBandsOf(empty),
-      LlmPipeline.docShingleHashesOf(empty, 3)).count() == 0,
+      LlmPipeline.docShingleHashes(empty, 3)).count() == 0,
       "cold-start (empty index) should score no partners")
     // the composed pipeline on a COLD START: null percentile bounds
     // must not poison the quality conjunction — every first-batch doc
