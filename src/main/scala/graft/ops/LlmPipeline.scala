@@ -4006,8 +4006,9 @@ object LlmPipeline {
   def decontaminateNgram(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val evalSet = docShingleHashes(docs.where(col("doc_id") < 100), DecontamWidth)
-      .select(col("h")).as[Long].collect().toSet
+    val evalSet =
+      docShingleHashes(docs.where(col("doc_id") < 100), DecontamWidth)
+        .select(col("h")).as[Long].collect().toSet
     val bc = graft.Broadcasts.track(s.sparkContext.broadcast(evalSet))
     decontaminated(docs, bc)(_ contains _)
   }
